@@ -48,16 +48,11 @@ object BucketedBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bucketed-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = ClusterConfigs.local(
+        SparkSession.builder().appName("graft-bucketed-bench"), cpus)
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -72,10 +67,10 @@ object BucketedBench {
             .iterator().asScala.foreach(java.nio.file.Files.delete)
       }
       Tables.lineitem(spark, sfDir).write
-        .bucketBy(cpus.toInt, "l_orderkey").sortBy("l_orderkey")
+        .bucketBy(cpus, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("lineitem_bucketed")
       Tables.orders(spark, sfDir).write
-        .bucketBy(cpus.toInt, "o_orderkey").sortBy("o_orderkey")
+        .bucketBy(cpus, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable("orders_bucketed")
     }
     def plain = joinAgg(

@@ -102,12 +102,9 @@ object ScaleProbe {
     * `scale` multiplies docs/vectors/lineitem-replicas AND topics —
     * docs-per-topic stays constant, keeping near-dup density linear. */
   def ensureCorpus(s: SparkSession, dir: String, scale: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val done = Seq("documents.parquet", "embeddings.parquet",
-      "lineitem.parquet").forall(t => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/$t", "_SUCCESS")))
-    if (done) return
+    if (graft.ops.PersistedIndex.complete(s, Seq("documents.parquet",
+        "embeddings.parquet", "lineitem.parquet").map(t => s"$dir/$t")))
+      return
 
     // --- documents: disjoint-topic token sampling -----------------------
     // vocab = the corpus's empirical 31 tokens (sorted by frequency).

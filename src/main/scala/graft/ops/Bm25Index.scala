@@ -21,11 +21,7 @@ import org.apache.spark.sql.functions._
   *  - `lexicon/`  — (tok, df) per distinct term, same bucket layout.
   *  - `stats/`    — one row (n_docs, n_toks), exact BIGINTs.
   *
-  * The corpus key embeds (row count, max doc_id, order-independent
-  * `bit_xor(xxhash64(doc_id, text))`) of the documents table
-  * ([[IvfIndex.indexRoot]]'s stale-index guard, content-hardened): any
-  * regenerated corpus — even one with identical count and max id —
-  * changes the key and [[ensure]] rebuilds.
+  * Keying, completeness and build-or-serve are [[PersistedIndex]]'s.
   *
   * Serving reads the 1-row stats file, the pruned lexicon rows for the
   * query's terms, and the pruned postings buckets; the query-term frame
@@ -48,10 +44,11 @@ object Bm25Index {
     * the serve plan is bucket-count-agnostic. */
   val Buckets = 32
 
-  final case class IndexPaths(root: String) {
+  final case class IndexPaths(root: String) extends PersistedIndex.Layout {
     def postings: String = s"$root/postings"
     def lexicon: String = s"$root/lexicon"
     def stats: String = s"$root/stats"
+    def all: Seq[String] = Seq(postings, lexicon, stats)
   }
 
   private def bucketOf(tok: org.apache.spark.sql.Column) =
@@ -61,18 +58,9 @@ object Bm25Index {
     graft.Tables.fanout(graft.Tables.documents(s, sfDir))
       .select(col("doc_id"), graft.ops.TextOps.tokens(col("text")).as("toks"))
 
-  /** Deterministic per-corpus index location (gitignored `target/`).
-    * Key = (row count, max doc_id, order-independent content xor): a
-    * regenerated corpus with the same shape but different text still
-    * changes the key — postings can never silently serve stale. */
-  def indexRoot(s: SparkSession, sfDir: String): String = {
-    val fp = graft.Tables.documents(s, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")),
-        expr("bit_xor(xxhash64(doc_id, text))")).collect()(0)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/bm25-index/$key-${fp.getLong(0)}-${fp.getLong(1)}" +
-      s"-${java.lang.Long.toHexString(fp.getLong(2))}"
-  }
+  /** Bump on ANY change to what [[build]] writes (tokenizer, tf/df/dl
+    * definitions, bucket layout) — see [[PersistedIndex]]. */
+  val Version = 1
 
   /** Scan the corpus once and materialize postings + lexicon + stats. */
   def build(s: SparkSession, sfDir: String, root: String): IndexPaths = {
@@ -96,13 +84,9 @@ object Bm25Index {
 
   /** Build iff the index for this corpus doesn't exist yet. */
   def ensure(s: SparkSession, sfDir: String): IndexPaths = {
-    val root = indexRoot(s, sfDir)
-    val p = IndexPaths(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val complete = Seq(p.postings, p.lexicon, p.stats).forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    if (complete) p else build(s, sfDir, root)
+    val root = PersistedIndex.root("bm25-index", Version, sfDir,
+      graft.Tables.documents(s, sfDir), "doc_id", "text")
+    PersistedIndex.ensure(s, IndexPaths(root))(build(s, sfDir, root))
   }
 
   /** Serving-only BM25 top-k (t50): the t36 query set against the

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *    ~24 B/doc payload at 100 TB, vs re-tokenizing the corpus per
   *    query).
   *
-  * The corpus key embeds (row count, max doc_id) of the documents table,
-  * so a regenerated corpus can never silently serve a stale model.
+  * Keying (with the label kind as suffix), completeness and
+  * build-or-serve are [[PersistedIndex]]'s.
   *
   * Scale shape: the build is ONE tokenize pass feeding three combinable
   * aggregations + three writes; nothing but _SUCCESS markers reaches the
@@ -46,15 +46,11 @@ object ClassifierIndex {
   /** CV folds (doc_id % Folds; fold 0 is the t38 holdout). */
   val Folds = 4
 
-  final case class Paths(root: String) {
+  final case class Paths(root: String) extends PersistedIndex.Layout {
     def tokcnt: String = s"$root/tokcnt"
     def docstats: String = s"$root/docstats"
     def teacher: String = s"$root/teacher"
-  }
-
-  def classesOf(kind: String): Int = kind match {
-    case Binary => 2
-    case Tercile => 3
+    def all: Seq[String] = Seq(teacher, tokcnt, docstats)
   }
 
   /** The teacher label column for `kind` over a tokens array — verbatim
@@ -72,16 +68,14 @@ object ClassifierIndex {
     }
   }
 
-  /** Deterministic per-corpus model location (under sbt's gitignored
-    * `target/`; cwd is the repo root for every graft entry point). */
-  def indexRoot(s: SparkSession, sfDir: String, kind: String): String = {
-    val fp = graft.Tables.documents(s, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")),
-        expr("bit_xor(xxhash64(doc_id, text))")).collect()(0)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/nb-model/$key-${fp.getLong(0)}-${fp.getLong(1)}" +
-      s"-${java.lang.Long.toHexString(fp.getLong(2))}-$kind"
-  }
+  /** Bump on ANY change to what [[build]] writes (tokenizer, teacher
+    * heuristics, fold split) — see [[PersistedIndex]]. */
+  val Version = 1
+
+  /** The model location for this corpus and label kind. */
+  def indexRoot(s: SparkSession, sfDir: String, kind: String): String =
+    PersistedIndex.root("nb-model", Version, sfDir,
+      graft.Tables.documents(s, sfDir), "doc_id", "text", kind)
 
   /** One tokenize pass → teacher labels + fold-grained count stats. */
   def build(s: SparkSession, sfDir: String, kind: String,
@@ -113,12 +107,7 @@ object ClassifierIndex {
   /** Build iff the model for this corpus+kind doesn't exist yet. */
   def ensure(s: SparkSession, sfDir: String, kind: String): Paths = {
     val root = indexRoot(s, sfDir, kind)
-    val p = Paths(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val complete = Seq(p.teacher, p.tokcnt, p.docstats).forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    if (complete) p else build(s, sfDir, kind, root)
+    PersistedIndex.ensure(s, Paths(root))(build(s, sfDir, kind, root))
   }
 
   /** The persisted teacher frame (doc_id, fold, cls, teacher_bp). */

@@ -29,42 +29,26 @@ import org.apache.spark.sql.functions._
   *    order) and p9 (crash resume) plan over these |shards| rows and
   *    never touch the corpus.
   *
-  * The corpus key embeds (row count, max doc_id, order-independent
-  * content xor) — the content-hardened stale-artifact guard shared
-  * with the other persisted indexes. At 100 TB `docs/` is the
+  * Keying, completeness and build-or-serve are [[PersistedIndex]]'s
+  * (under `target/curation-index/`). At 100 TB `docs/` is the
   * corpus-grain stage table the [[CurationLedger]] scaladoc names
   * (partitioned by source/date in a real deployment); `ledger/` and
   * `manifest/` are the run's control-plane rows.
   */
 object CurationIndex {
 
-  final case class Paths(root: String) {
+  final case class Paths(root: String) extends PersistedIndex.Layout {
     def docs: String = s"$root/docs"
     def ledger: String = s"$root/ledger"
     def manifest: String = s"$root/manifest"
+    def all: Seq[String] = Seq(docs, ledger, manifest)
   }
 
-  /** Curation-CHAIN version, embedded in the artifact key alongside the
-    * corpus fingerprint. The fingerprint guards against corpus drift;
-    * this literal guards against LOGIC drift — editing
-    * [[CurationLedger]]'s thresholds or stage semantics would otherwise
-    * leave stale persisted artifacts that p1/p4/p5/p7/p9 silently serve
-    * (and internal cross-checks like p4-vs-p1 read the SAME stale
-    * artifact, so they keep passing). BUMP THIS on any CurationLedger
-    * semantic change — the model-'kind' suffix discipline from
-    * [[ClassifierIndex]]. */
-  val ChainVersion = 1
-
-  /** Deterministic per-corpus artifact location (gitignored
-    * `target/`); key = (chain version, count, max id, content xor). */
-  def indexRoot(s: SparkSession, sfDir: String): String = {
-    val fp = graft.Tables.documents(s, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")),
-        expr("bit_xor(xxhash64(doc_id, text))")).collect()(0)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/curation-index/v$ChainVersion-$key-${fp.getLong(0)}" +
-      s"-${fp.getLong(1)}-${java.lang.Long.toHexString(fp.getLong(2))}"
-  }
+  /** Bump on ANY change to what [[build]] writes — [[CurationLedger]]'s
+    * thresholds or stage semantics included, since p1/p4/p5/p7/p9 (and
+    * cross-checks like p4-vs-p1) all read the SAME persisted artifact and
+    * would keep agreeing on a stale one. See [[PersistedIndex]]. */
+  val Version = 1
 
   /** ONE chain run → the three persisted artifacts. */
   def build(s: SparkSession, sfDir: String, root: String): Paths = {
@@ -88,13 +72,9 @@ object CurationIndex {
 
   /** Build iff the artifacts for this corpus don't exist yet. */
   def ensure(s: SparkSession, sfDir: String): Paths = {
-    val root = indexRoot(s, sfDir)
-    val p = Paths(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val complete = Seq(p.docs, p.ledger, p.manifest).forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    if (complete) p else build(s, sfDir, root)
+    val root = PersistedIndex.root("curation-index", Version, sfDir,
+      graft.Tables.documents(s, sfDir), "doc_id", "text")
+    PersistedIndex.ensure(s, Paths(root))(build(s, sfDir, root))
   }
 
   def docsDf(s: SparkSession, p: Paths): DataFrame =

@@ -51,14 +51,11 @@ import org.apache.spark.sql.functions._
   * intermediates (an artifact larger than the corpus), and everything
   * reused downstream of them IS persisted above.
   *
-  * The corpus key embeds ([[ChainVersion]], row count, max doc_id,
-  * order-independent content xor) — content drift rebuilds via the
-  * fingerprint, LOGIC drift via the version literal (bump on any knob
-  * or chain-semantics change; the CurationIndex discipline). At 100 TB:
-  * signatures/edges partition by hash bucket, the star forest is the
-  * parquet persisted between corpus drops (d35's incremental-CC refresh
-  * consumes exactly it), and `candidates/` is what the ingest-time delta
-  * probes (d12) band against.
+  * Keying, completeness and build-or-serve are [[PersistedIndex]]'s
+  * (under `target/dedup-index/`). At 100 TB: signatures/edges partition
+  * by hash bucket, the star forest is the parquet persisted between
+  * corpus drops (d35's incremental-CC refresh consumes exactly it), and
+  * `candidates/` is what the ingest-time delta probes (d12) band against.
   */
 object DedupIndex {
 
@@ -77,12 +74,8 @@ object DedupIndex {
   /** MOSS boilerplate cull: fingerprints in more docs than this are
     * dropped before pairing. */
   val WinMaxDocs = 10
-  /** Bump on ANY semantic change to the chain above (knobs, hash family,
-    * CC algorithm) — stale persisted artifacts must not survive a logic
-    * edit that the corpus fingerprint cannot see. */
-  val ChainVersion = 1
 
-  final case class Paths(root: String) {
+  final case class Paths(root: String) extends PersistedIndex.Layout {
     def minhash: String = s"$root/minhash"
     def candidates: String = s"$root/candidates"
     def edges: String = s"$root/edges"
@@ -95,16 +88,9 @@ object DedupIndex {
       classes, classEdges, classCanon, winnowFp)
   }
 
-  /** Deterministic per-corpus artifact location (gitignored `target/`);
-    * key = (chain version, count, max id, content xor). */
-  def indexRoot(s: SparkSession, sfDir: String): String = {
-    val fp = graft.Tables.documents(s, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")),
-        expr("bit_xor(xxhash64(doc_id, text))")).collect()(0)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/dedup-index/v$ChainVersion-$key-${fp.getLong(0)}" +
-      s"-${fp.getLong(1)}-${java.lang.Long.toHexString(fp.getLong(2))}"
-  }
+  /** Bump on ANY change to what [[build]] writes (knobs, hash family,
+    * CC algorithm) — see [[PersistedIndex]]. */
+  val Version = 1
 
   /** ONE chain run → the eight persisted artifacts. Each derived frame
     * is built FROM the already-persisted parquet of its input (not the
@@ -145,13 +131,9 @@ object DedupIndex {
 
   /** Build iff the artifacts for this corpus don't exist yet. */
   def ensure(s: SparkSession, sfDir: String): Paths = {
-    val root = indexRoot(s, sfDir)
-    val p = Paths(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val complete = p.all.forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    if (complete) p else build(s, sfDir, root)
+    val root = PersistedIndex.root("dedup-index", Version, sfDir,
+      graft.Tables.documents(s, sfDir), "doc_id", "text")
+    PersistedIndex.ensure(s, Paths(root))(build(s, sfDir, root))
   }
 
   def minhashDf(s: SparkSession, p: Paths): DataFrame =

@@ -23,10 +23,12 @@ import org.apache.spark.sql.functions._
   *    the directory layout IS the inverted-list structure — a serve-time
   *    probe of `nprobe` lists partition-prunes to those directories and
   *    never touches the rest of the corpus. Raw vectors appear nowhere.
+  *  - `stats/`      — one row (n_vecs, n_planted, max_id): the corpus size
+  *    consumers that size bucket layouts from N read instead of paying a
+  *    count() over the corpus ([[plantedCount]]).
   *
-  * The corpus key embeds (row count, max id) of the embeddings table, so
-  * a regenerated corpus can never silently serve a stale index — the key
-  * changes and [[ensure]] rebuilds.
+  * Keying (on the embeddings table), completeness and build-or-serve are
+  * [[PersistedIndex]]'s.
   *
   * Scale shape: the build is n14's training (linear scans; only k×dims
   * centroids and 16-row codebooks reach the driver) plus one
@@ -38,52 +40,33 @@ object IvfIndex {
   import graft.queries.SimilarityQueries.{KmIters, KmK, NumQueries, PqM,
     trainedCodebooks, pqEncodeCol, pqAdcArr}
 
-  final case class IndexPaths(root: String) {
+  final case class IndexPaths(root: String) extends PersistedIndex.Layout {
     def centroids: String = s"$root/centroids"
     def codebooks: String = s"$root/codebooks"
     def codes: String = s"$root/codes"
     def stats: String = s"$root/stats"
+    def all: Seq[String] = Seq(centroids, codebooks, codes, stats)
   }
 
   private def corpusVecs(s: SparkSession, sfDir: String): DataFrame =
     graft.Tables.fanout(graft.Tables.embeddings(s, sfDir))
       .select(col("vec_id").as("id"), toDouble(col("embedding")).as("emb"))
 
-  /** Deterministic per-corpus index location (under sbt's gitignored
-    * `target/`; cwd is the repo root for every graft entry point). */
-  def indexRoot(s: SparkSession, sfDir: String): String = {
-    val fp = graft.Tables.embeddings(s, sfDir)
-      .agg(count(lit(1)), max(col("vec_id")),
-        expr("bit_xor(xxhash64(vec_id, embedding))")).collect()(0)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/ivf-index/$key-${fp.getLong(0)}-${fp.getLong(1)}" +
-      s"-${java.lang.Long.toHexString(fp.getLong(2))}"
-  }
-
-  /** Corpus-size stats ride with the index (1 row): consumers that size
-    * bucket layouts from N — the SemDeDup k∝N knob in
-    * [[graft.queries.SimilarityQueries]]' clusterNearDupPairs — read
-    * this row instead of paying a count() action over the corpus on
-    * every invocation. n_planted = |id % PlantMod == 0| so the planted
-    * twin corpus's exact cardinality is derivable without assuming id
-    * density. Factored out of [[build]] so [[ensure]] can BACKFILL the
-    * stats file alone onto an index persisted before stats existed —
-    * one corpus agg instead of a full retrain (k-means + codebooks +
-    * partitioned code write) just to learn a count. */
-  private def writeStats(s: SparkSession, sfDir: String,
-      p: IndexPaths): Unit =
-    corpusVecs(s, sfDir)
-      .agg(count(lit(1)).as("n_vecs"),
-        coalesce(sum(when(col("id") % graft.queries.SimilarityQueries
-          .PlantMod === 0, 1L).otherwise(0L)), lit(0L)).as("n_planted"),
-        coalesce(max(col("id")), lit(-1L)).as("max_id"))
-      .coalesce(1).write.mode("overwrite").parquet(p.stats)
+  /** Bump on ANY change to what [[build]] writes (k-means, PQ training,
+    * code layout, stats) — see [[PersistedIndex]]. */
+  val Version = 1
 
   /** Train coarse quantizer + PQ codebooks and materialize the index. */
   def build(s: SparkSession, sfDir: String, root: String): IndexPaths = {
     val p = IndexPaths(root)
     val v = corpusVecs(s, sfDir)
-    writeStats(s, sfDir, p)
+    // n_planted = |id % PlantMod == 0|: the planted twin corpus's exact
+    // cardinality, derivable without assuming id density.
+    v.agg(count(lit(1)).as("n_vecs"),
+        coalesce(sum(when(col("id") % graft.queries.SimilarityQueries
+          .PlantMod === 0, 1L).otherwise(0L)), lit(0L)).as("n_planted"),
+        coalesce(max(col("id")), lit(-1L)).as("max_id"))
+      .coalesce(1).write.mode("overwrite").parquet(p.stats)
     val (cents, assigned) = kmeansFit(v, KmK, KmIters)
     val cbs = trainedCodebooks(v)
     cents.select(col("cid").as("list_id"), col("cent").as("centroid"))
@@ -105,22 +88,11 @@ object IvfIndex {
     p
   }
 
-  /** Build iff the index for this corpus doesn't exist yet. An index
-    * whose trained artifacts (centroids/codebooks/codes) are complete but
-    * which predates the stats file gets the stats row backfilled alone —
-    * never a full retrain for a 1-row count. */
+  /** Build iff the index for this corpus doesn't exist yet. */
   def ensure(s: SparkSession, sfDir: String): IndexPaths = {
-    val root = indexRoot(s, sfDir)
-    val p = IndexPaths(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    def ok(d: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-    val trained = Seq(p.centroids, p.codebooks, p.codes).forall(ok)
-    if (trained) {
-      if (!ok(p.stats)) writeStats(s, sfDir, p)
-      p
-    } else build(s, sfDir, root)
+    val root = PersistedIndex.root("ivf-index", Version, sfDir,
+      graft.Tables.embeddings(s, sfDir), "vec_id", "embedding")
+    PersistedIndex.ensure(s, IndexPaths(root))(build(s, sfDir, root))
   }
 
   /** |plantedVecs| for this corpus from the persisted stats row — the

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *  - `totals/` — one row (n_tok)
   * All counts are exact BIGINTs from the doc_id%4≠0 training split
   * (t37's spec), so persisted-model scoring is bit-identical to t37's
-  * in-query form.
+  * in-query form. Keying, completeness and build-or-serve are
+  * [[PersistedIndex]]'s.
   *
   * Scale shape: the build is three map-side-combinable count aggs over
   * one corpus scan; the tables are VOCAB-bounded (|bigram types|, not
@@ -30,11 +31,12 @@ import org.apache.spark.sql.functions._
   */
 object LmIndex {
 
-  final case class IndexPaths(root: String) {
+  final case class IndexPaths(root: String) extends PersistedIndex.Layout {
     def pair: String = s"$root/pair"
     def pref: String = s"$root/pref"
     def uni: String = s"$root/uni"
     def totals: String = s"$root/totals"
+    def all: Seq[String] = Seq(pair, pref, uni, totals)
   }
 
   private def corpusToks(s: SparkSession, sfDir: String): DataFrame =
@@ -50,17 +52,9 @@ object LmIndex {
         (a: Column, b: Column) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
 
-  /** Deterministic per-corpus index location (gitignored `target/`).
-    * Key = (row count, max doc_id, order-independent content xor) —
-    * same-shape-different-text regeneration changes the key. */
-  def indexRoot(s: SparkSession, sfDir: String): String = {
-    val fp = graft.Tables.documents(s, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")),
-        expr("bit_xor(xxhash64(doc_id, text))")).collect()(0)
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/lm-index/$key-${fp.getLong(0)}-${fp.getLong(1)}" +
-      s"-${java.lang.Long.toHexString(fp.getLong(2))}"
-  }
+  /** Bump on ANY change to what [[build]] writes (tokenizer, training
+    * split, count tables) — see [[PersistedIndex]]. */
+  val Version = 1
 
   /** Derive the t37 model tables from the training split and persist. */
   def build(s: SparkSession, sfDir: String, root: String): IndexPaths = {
@@ -82,13 +76,9 @@ object LmIndex {
 
   /** Build iff the index for this corpus doesn't exist yet. */
   def ensure(s: SparkSession, sfDir: String): IndexPaths = {
-    val root = indexRoot(s, sfDir)
-    val p = IndexPaths(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val complete = Seq(p.pair, p.pref, p.uni, p.totals).forall(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    if (complete) p else build(s, sfDir, root)
+    val root = PersistedIndex.root("lm-index", Version, sfDir,
+      graft.Tables.documents(s, sfDir), "doc_id", "text")
+    PersistedIndex.ensure(s, IndexPaths(root))(build(s, sfDir, root))
   }
 
   /** Score the doc_id%4=0 holdout against the PERSISTED model — t37's

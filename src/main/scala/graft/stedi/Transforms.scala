@@ -65,7 +65,7 @@ object Transforms {
   /** P2: parse `stedi-events` risk events → `{customer, score}`
     * (`sparkpyeventskafkastreamtoconsole.py:38-61`). */
   def parseRiskEvent(df: DataFrame): DataFrame =
-    df.selectExpr("CAST(value AS STRING) value")
+    castValueAsString(df)
       .withColumn("value", from_json(col("value"), Schemas.stediSchema))
       .select(col("value.customer"), col("value.score"))
 
@@ -93,14 +93,9 @@ object Transforms {
     * bounded-state production join makes. */
   def joinRiskWithCustomerWatermarked(
       risk: DataFrame, riskTs: Column, customer: DataFrame, custTs: Column,
-      delay: String): DataFrame = {
-    val r = risk.withColumn("__ts", riskTs).withWatermark("__ts", delay)
-    val c = customer.withColumn("__cts", custTs).withWatermark("__cts", delay)
-    r.join(c,
-      expr(s"email = customer AND __cts BETWEEN __ts - INTERVAL $delay" +
-        s" AND __ts + INTERVAL $delay"))
+      delay: String): DataFrame =
+    watermarkedJoin(risk, riskTs, customer, custTs, delay, "inner")
       .drop("__ts", "__cts")
-  }
 
   /** LEFT OUTER stream-stream join (beyond the reference's inner join):
     * risk events with no matching customer are emitted null-padded once the
@@ -110,13 +105,8 @@ object Transforms {
     * window has closed and evict its state. */
   def joinRiskWithCustomerLeftOuter(
       risk: DataFrame, riskTs: Column, customer: DataFrame, custTs: Column,
-      delay: String): DataFrame = {
-    val r = risk.withColumn("__ts", riskTs).withWatermark("__ts", delay)
-    val c = customer.withColumn("__cts", custTs).withWatermark("__cts", delay)
-    r.join(c,
-      expr(s"email = customer AND __cts BETWEEN __ts - INTERVAL $delay AND __ts + INTERVAL $delay"),
-      "left_outer")
-  }
+      delay: String): DataFrame =
+    watermarkedJoin(risk, riskTs, customer, custTs, delay, "left_outer")
 
   /** FULL OUTER stream-stream join: unmatched rows from EITHER side emit
     * null-padded once the watermark closes their match window — risk events
@@ -125,12 +115,22 @@ object Transforms {
     * bound requirements as the left-outer variant. */
   def joinRiskWithCustomerFullOuter(
       risk: DataFrame, riskTs: Column, customer: DataFrame, custTs: Column,
-      delay: String): DataFrame = {
+      delay: String): DataFrame =
+    watermarkedJoin(risk, riskTs, customer, custTs, delay, "full_outer")
+
+  /** Both sides watermarked by `delay` on their event time (`__ts` for
+    * risk, `__cts` for customer), joined on `email = customer` with
+    * `__cts BETWEEN __ts ± delay`; the event-time columns stay in the
+    * output. */
+  private def watermarkedJoin(
+      risk: DataFrame, riskTs: Column, customer: DataFrame, custTs: Column,
+      delay: String, joinType: String): DataFrame = {
     val r = risk.withColumn("__ts", riskTs).withWatermark("__ts", delay)
     val c = customer.withColumn("__cts", custTs).withWatermark("__cts", delay)
     r.join(c,
-      expr(s"email = customer AND __cts BETWEEN __ts - INTERVAL $delay AND __ts + INTERVAL $delay"),
-      "full_outer")
+      expr(s"email = customer AND __cts BETWEEN __ts - INTERVAL $delay" +
+        s" AND __ts + INTERVAL $delay"),
+      joinType)
   }
 
   /** Reserialize all columns as one JSON `value` for the Kafka sink
