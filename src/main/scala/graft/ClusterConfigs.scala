@@ -6,16 +6,28 @@ import org.apache.spark.sql.SparkSession
   *
   * [[local]] is what the test/bench harness runs (single JVM, `local[n]`);
   * [[cluster]] is the 1000-executor / 100 TB profile every operator in this
-  * library is designed against. The two differ ONLY in sizing — no operator
-  * behaves differently between them, which is the point: the same plans that
-  * pass the DuckDB oracle here run unchanged on the cluster.
+  * library is designed against. The same plans that pass the DuckDB oracle
+  * here run unchanged on the cluster. The profiles differ in:
+  *  - sizing: `local` uses one shuffle partition per core and Spark's default
+  *    file split and broadcast threshold; `cluster` sets all three (see its
+  *    per-setting rationale);
+  *  - skew-join splitting, on in `cluster` only;
+  *  - the streaming state store: `cluster` sets RocksDB, `local` keeps the
+  *    default HDFS-backed (in-memory) provider;
+  *  - serializer: `cluster` sets Kryo, `local` keeps Java serialization;
+  *  - `cluster` registers [[GraftExtensions]] and leaves the master and UI to
+  *    the launcher; `local` sets `local[n]` and turns the UI off.
+  * Both use AQE and a UTC session time zone, and both pass through
+  * [[inProcessLocalFs]]: `file:` paths go through [[InProcessLocalFs]], so
+  * checkpoints, state stores and file-source metadata are written without
+  * forking `chmod`/`readlink` per file when `libhadoop` is absent.
   */
 object ClusterConfigs {
 
   /** Harness profile — mirrors Verify/Bench: partitions = cores, AQE on,
     * UTC so timestamps match the oracle. */
   def local(builder: SparkSession.Builder, cores: Int): SparkSession.Builder =
-    builder
+    inProcessLocalFs(builder)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -46,7 +58,7 @@ object ClusterConfigs {
     *    typed Aggregator buffers (TopK/VecCentroid/QuantileSketch).
     */
   def cluster(builder: SparkSession.Builder): SparkSession.Builder =
-    builder
+    inProcessLocalFs(builder)
       .config("spark.sql.shuffle.partitions", "20000")
       .config("spark.sql.files.maxPartitionBytes", "256m")
       .config("spark.sql.adaptive.enabled", "true")
@@ -57,4 +69,12 @@ object ClusterConfigs {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+
+  /** The `file:` scheme, for both the `FileSystem` and the `FileContext` API,
+    * through the fork-free local filesystem. Checksums, atomic renames and
+    * permission bits are stock; see [[InProcessRawLocalFileSystem]]. */
+  private def inProcessLocalFs(builder: SparkSession.Builder): SparkSession.Builder =
+    builder
+      .config("spark.hadoop.fs.file.impl", classOf[InProcessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[InProcessLocalFs].getName)
 }

@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
+    val s = ClusterConfigs.local(SparkSession.builder().appName("graft-ext-spec"), 2)
       .getOrCreate()
     GraftExtensions.install(s)
     s

@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite; UTC + small shuffle partitions to
-  * mirror the Verify/Bench harness configs. */
+/** One shared local session per suite, built from the Verify/Bench harness
+  * profile ([[ClusterConfigs.local]]) at 4 cores. */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    ClusterConfigs.local(SparkSession.builder().appName(getClass.getSimpleName), 4)
+      .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
 }
