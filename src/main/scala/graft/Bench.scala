@@ -188,9 +188,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = ClusterConfigs.local(
-      SparkSession.builder().appName("graft-bench"), cpus.toInt).getOrCreate()
+      SparkSession.builder().appName("graft-bench"), ClusterConfigs.localCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadBefore = loadavg()
     val prior = priorTimes()

@@ -48,7 +48,7 @@ object BucketedBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = ClusterConfigs.localCores
     val spark = ClusterConfigs.local(
         SparkSession.builder().appName("graft-bucketed-bench"), cpus)
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -24,6 +24,11 @@ import org.apache.spark.sql.SparkSession
   */
 object ClusterConfigs {
 
+  /** Cores for a harness's `local[n]`: `SPARK_GRAFT_CPUS` if set, else every
+    * core the JVM sees. */
+  def localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Harness profile — mirrors Verify/Bench: partitions = cores, AQE on,
     * UTC so timestamps match the oracle. */
   def local(builder: SparkSession.Builder, cores: Int): SparkSession.Builder =

@@ -51,9 +51,8 @@ object Perf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q1_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = ClusterConfigs.local(
-      SparkSession.builder().appName("graft-perf"), cpus.toInt).getOrCreate()
+      SparkSession.builder().appName("graft-perf"), ClusterConfigs.localCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -179,7 +179,7 @@ object ScaleProbe {
     // honor the harness core-count contract (the bench's second axis):
     // the verdict wants probe ratios at BOTH core counts, and a
     // hardcoded 32 made the 8-core probe silently identical
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = ClusterConfigs.localCores
     val spark = ClusterConfigs.local(
       SparkSession.builder().appName("graft-scale-probe")
         // RDD blocks (the DISK_ONLY stage frames at the decade — see

@@ -6,12 +6,7 @@ import org.apache.spark.sql.SparkSession
   * sf0.001 must return >0 rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = ClusterConfigs.local(SparkSession.builder().appName("graft-smoke"), 4)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)

@@ -11,8 +11,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = ClusterConfigs.local(SparkSession.builder(), cpus.toInt)
+    val spark = ClusterConfigs.local(SparkSession.builder(), ClusterConfigs.localCores)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

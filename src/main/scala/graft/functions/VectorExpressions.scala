@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, DoubleType, LongType,
+  StructField, StructType}
 
 /** Native Catalyst vector kernels with whole-stage codegen — the hot path of
   * similarity search. Spark's higher-order functions (`zip_with` +
@@ -252,6 +253,79 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
+  /** Nearest centroid by squared L2: the one argmin of Lloyd's assign step,
+    * IVF list admission and PQ encoding. `cents` holds (cid, cent, ‖cent‖²)
+    * structs. Per centroid, `d2 = (‖v‖² + c_n2) − 2.0·dot(v, cent)` with
+    * both folds ascending, exactly [[VecNorm2]] and [[DotProduct]]; the
+    * result is the smallest `(d2, cid)` in Spark's struct ordering (d2 by
+    * `SQLOrderingUtil.compareDoubles`, ties to the smaller cid), so it is
+    * bit-identical to `least(struct(d2, cid), …)` over the same centroids
+    * in any list order. Null centroid elements are skipped, as `least()`
+    * skips null structs; an empty list gives null, and so does a centroid
+    * whose length differs from the vector's (its dot would be null). One
+    * compiled loop serves both eval and codegen, as in [[MinHashKernel]]. */
+  def nearest(x: ArrayData, cs: ArrayData): InternalRow = {
+    val n = x.numElements()
+    var vn = 0.0
+    var i = 0
+    while (i < n) { val v = x.getDouble(i); vn += v * v; i += 1 }
+    var found = false
+    var bestD = 0.0
+    var bestC = 0L
+    var j = 0
+    while (j < cs.numElements()) {
+      if (!cs.isNullAt(j)) {
+        val c = cs.getStruct(j, 3)
+        val cent = c.getArray(1)
+        if (cent.numElements() != n) return null
+        var dot = 0.0
+        i = 0
+        while (i < n) { dot += x.getDouble(i) * cent.getDouble(i); i += 1 }
+        val d2 = (vn + c.getDouble(2)) - 2.0 * dot
+        val cid = c.getLong(0)
+        val cmp = if (found) SQLOrderingUtil.compareDoubles(d2, bestD) else -1
+        if (cmp < 0 || (cmp == 0 && cid < bestC)) {
+          found = true; bestD = d2; bestC = cid
+        }
+      }
+      j += 1
+    }
+    if (found) InternalRow(bestD, bestC) else null
+  }
+
+  /** `nearest_centroid(vec ARRAY<DOUBLE>, cents ARRAY<STRUCT<cid BIGINT,
+    * cent ARRAY<DOUBLE>, c_n2 DOUBLE>>)` (fields by position) →
+    * STRUCT<d2 DOUBLE, cid BIGINT>; see [[nearest]]. */
+  case class NearestCentroid(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = StructType(Seq(
+      StructField("d2", DoubleType, nullable = false),
+      StructField("cid", LongType, nullable = false)))
+    override def nullIntolerant: Boolean = true
+    override def nullable: Boolean = true
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(StructType(Array(
+          StructField(_, LongType, _, _), StructField(_, ArrayType(DoubleType, _), _, _),
+          StructField(_, DoubleType, _, _))), _)) => TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"expected ARRAY<DOUBLE>, ARRAY<STRUCT<BIGINT, ARRAY<DOUBLE>, DOUBLE>>, got $l, $r")
+    }
+
+    override def nullSafeEval(a: Any, b: Any): Any =
+      nearest(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"""
+           |${ev.value} = graft.functions.VectorExpressions.nearest($a, $b);
+           |${ev.isNull} = ${ev.value} == null;
+         """.stripMargin)
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
   // Column-API surface
   def dot_product(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
@@ -261,4 +335,6 @@ object VectorExpressions {
     Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
   def banded_dtw8(a: Column, b: Column): Column =
     Bridge.column(BandedDtw8(Bridge.expression(a), Bridge.expression(b)))
+  def nearest_centroid(vec: Column, cents: Column): Column =
+    Bridge.column(NearestCentroid(Bridge.expression(vec), Bridge.expression(cents)))
 }

@@ -70,19 +70,6 @@ object DedupOps {
       .select(col("doc_id") +: hs: _*)
   }
 
-  /** HOF reference formulation of the same signature (math identical to the
-    * [[graft.functions.MinHashKernel]] fast path; equality asserted in
-    * `DedupSpec`). */
-  def minhashSignatureHof(shingleArr: DataFrame, numHashes: Int): DataFrame = {
-    val withBases = shingleArr.withColumn("bases",
-      transform(col("sh_arr"), s => hash32(s)))
-    val mins = (0 until numHashes).map { i =>
-      val (a, b) = permParams(i)
-      array_min(transform(col("bases"), x => (x * a + b) % MinhashP)).as(s"h$i")
-    }
-    withBases.select(col("doc_id") +: mins: _*)
-  }
-
   /** Exact Jaccard for candidate pairs from per-doc shingle ARRAYS (set
     * semantics via array_distinct/array_intersect) — joins only the
     * candidate docs, no corpus-wide explode+distinct shuffle. */
@@ -974,24 +961,11 @@ object DedupOps {
   def tokenHashes(toks: Column): Column =
     graft.functions.TokenHashKernel.token_hashes(array_distinct(toks))
 
-  /** HOF reference for [[tokenHashes]] (equality asserted in `DedupSpec`). */
-  def tokenHashesHof(toks: Column): Column =
-    transform(array_distinct(toks), t => hash60(t))
-
   /** Per-row 32-bit SimHash over a precomputed token-hash array — the
     * compiled one-pass kernel ([[graft.functions.SimHashKernel]]); no row
     * explosion, no shuffle. */
   def simhash32(hs: Column): Column =
     graft.functions.SimHashKernel.simhash_32(hs)
-
-  /** HOF reference formulation (32 when/filter terms — interpreted, kept for
-    * the equality assertion in `DedupSpec`). */
-  def simhash32Hof(hs: Column): Column =
-    (0 until 32).map { j =>
-      when(lit(2) * size(filter(hs, h =>
-          shiftright(h, j).bitwiseAND(lit(1L)) === 1L)) > size(hs),
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** SimHash byte-bands (4 × 8 bits) for candidate generation: pairs within
     * Hamming ≤ 3 are guaranteed to share a band (pigeonhole); the ≤ maxHamming

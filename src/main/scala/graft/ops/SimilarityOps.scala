@@ -24,21 +24,12 @@ object SimilarityOps {
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
   /** Left-to-right dot product of two double arrays — native codegen'd
-    * kernel ([[graft.functions.VectorExpressions.DotProduct]]); bit-identical
-    * to the higher-order-function formulation below. */
+    * kernel ([[graft.functions.VectorExpressions.DotProduct]]). */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_product(a, b)
 
   /** Squared L2 norm (native kernel). */
   def norm2(a: Column): Column = graft.functions.VectorExpressions.vec_norm2(a)
-
-  /** Interpreted HOF reference implementations — kept for the equality
-    * cross-check in `SimilaritySpec` (native kernels must match these
-    * bit-for-bit). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
-  def norm2Hof(a: Column): Column =
-    aggregate(transform(a, x => x * x), lit(0.0), _ + _)
 
   /** cos(a,b) given precomputed squared norms: dot / sqrt(na2 * nb2). */
   def cosine(dotAb: Column, na2: Column, nb2: Column): Column =
@@ -141,10 +132,6 @@ object SimilarityOps {
     * [[lshSignature]] expressions (equality asserted in `SimilaritySpec`). */
   def lshSignatures(emb: Column, tables: Int, planes: Int, dims: Int): Column =
     graft.functions.LshSigKernel.lsh_sigs(emb, tables, planes, dims)
-
-  /** Expression-composed reference form of [[lshSignatures]]. */
-  def lshSignaturesHof(emb: Column, tables: Int, planes: Int, dims: Int): Column =
-    array((0 until tables).map(t => lshSignature(emb, t, planes, dims)): _*)
 
   /** LSH-bucketed ANN: candidates = union over hash tables of bucket
     * collisions; exact cosine ranking within candidates. Trades recall for
@@ -279,33 +266,23 @@ object SimilarityOps {
     *
     *  - init: centroids = the embeddings of ids 0..k-1 (deterministic — no
     *    rand(), so the whole run is engine-portable and oracle-checkable);
-    *  - assign: nearest centroid by squared L2, computed as
-    *    (‖v‖² + ‖c‖²) − 2·v·c with the codegen'd dot/norm kernels; ties
-    *    break to the smallest centroid id via a lexicographic least() over
-    *    (d2, cid) structs;
+    *  - assign: nearest centroid by squared L2, (‖v‖² + ‖c‖²) − 2·v·c, ties
+    *    to the smallest centroid id — the native
+    *    [[graft.functions.VectorExpressions.NearestCentroid]] kernel;
     *  - update: per-dimension mean through DECIMAL(27,10) (exact,
     *    partition-order-free — Spark's tree aggregation and DuckDB's
     *    sequential scan produce the same bits).
     *
     * The whole training CHAINS LAZILY: between iterations the centroid
-    * table stays a DataFrame, aggregated to ONE row holding the k sorted
+    * table stays a DataFrame, aggregated to ONE row holding the k
     * (cid, cent, c_n2) structs and broadcast back into the corpus
     * (`crossJoin(broadcast(1 row))` — a BroadcastNestedLoopJoin whose
     * build side is k×dims doubles, the same bound as a driver collect),
     * so the assign step stays a narrow per-row argmin with zero shuffle
-    * of the corpus and NO per-iteration driver action. The earlier form
-    * collected centroids to the driver and re-embedded them as literals
-    * each round, which cost one blocking collect job per iteration per
-    * training (n14's four concurrent PQ fits plus the coarse fit paid
-    * ~12 sequential job round-trips of pure scheduling latency at bench
-    * scale) AND fresh Janino codegen per round (literal doubles are
-    * baked into the generated source, defeating the codegen cache).
-    * Arithmetic is bit-identical to the literal form: same d2 expression
-    * against the same values (`c_n2` is [[norm2]]'s left fold — the same
-    * fold the Scala literal path computed), same lexicographic least().
-    * The only shuffle per iteration remains the update's |vecs|×dims
-    * partial sums, map-side combined. `iters` is fixed (no convergence
-    * test) so the computation is expressible as unrolled SQL.
+    * of the corpus and NO per-iteration driver action. The only shuffle
+    * per iteration is the update's |vecs|×dims partial sums, map-side
+    * combined. `iters` is fixed (no convergence test) so the computation
+    * is expressible as unrolled SQL.
     *
     * Returns (trained centroids (cid, cent, c_n2), final assignment
     * (id, cluster, d2)). The centroid frame is STAGED (≤k rows) before
@@ -313,7 +290,7 @@ object SimilarityOps {
     * chain exactly once. */
   def kmeansFit(vecs: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
     val cents = kmeansCentroids(vecs, k, iters).transform(graft.Tables.stage)
-    (cents, kmeansAssignTo(vecs, k, cents).select(col("id"), col("cluster"), col("d2")))
+    (cents, kmeansAssignTo(vecs, cents).select(col("id"), col("cluster"), col("d2")))
   }
 
   /** The lazily-chained trained-centroid frame of [[kmeansFit]] — for
@@ -321,20 +298,18 @@ object SimilarityOps {
     * which collects them once at the end): no staging action, one job
     * total. */
   def kmeansCentroids(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
-    val v = vecs.select(col("id"), col("emb"), norm2(col("emb")).as("n2"))
-    var cents = v.filter(col("id") < k)
-      .select(col("id").as("cid"), col("emb").as("cent"), col("n2").as("c_n2"))
+    var cents = vecs.filter(col("id") < k)
+      .select(col("id").as("cid"), col("emb").as("cent"), norm2(col("emb")).as("c_n2"))
     var i = 0
     while (i < iters) {
-      cents = kmeansUpdate(kmeansAssignTo(vecs, k, cents))
+      cents = kmeansUpdate(kmeansAssignTo(vecs, cents))
       i += 1
     }
     cents
   }
 
   /** One Lloyd update: per-cluster per-dimension DECIMAL(27,10) means
-    * over an assigned (cluster, emb) frame — the exact, partition-order-
-    * free arithmetic both the chained and the literal trainers share. */
+    * over an assigned (cluster, emb) frame. */
   private def kmeansUpdate(assigned: DataFrame): DataFrame =
     assigned.select(col("cluster"), posexplode(col("emb")).as(Seq("dim", "x")))
       .groupBy(col("cluster"), col("dim"))
@@ -345,88 +320,26 @@ object SimilarityOps {
         s => s.getField("c")).as("cent"))
       .select(col("cluster").as("cid"), col("cent"), norm2(col("cent")).as("c_n2"))
 
-  /** DRIVER-COLLECTED literal Lloyd — the pre-r14 form, retained for the
-    * SemDeDup SELF-JOIN consumers (semDedupRemovals / clusterNearDupPairs:
-    * d23, d23b, d23c, m8, m8b, n25). Those queries pay the whole training
-    * INSIDE the query, and the chained assign's per-candidate
-    * element_at/getField expressions cost ~2× the literal form's
-    * constant-folded codegen per row (r15 interleaved A/B: n25 warm
-    * 4.3–4.9 s literal vs 5.5–8.9 s chained; the Lloyd update stages
-    * read ~330–390 ms median/task literal vs ~600 ms chained). For these
-    * callers the per-iteration collect barrier the chain removed is the
-    * cheaper poison; single-consumer trainers (n6, n7, the n11/n14/n15/
-    * n21 families, IvfIndex builds) keep the collect-free chain, whose
-    * win was driver round-trips and cold-path codegen, not per-row cost.
-    *
-    * Bit-parity: identical d2 expression over identical values and the
-    * same lexicographic least() tie-break — r14 #2's parity argument run
-    * in reverse; a dropped (empty) cluster contributes no candidate,
-    * matching the chain's null-struct skip. Returns (id, cluster, d2). */
-  def kmeansAssignLits(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
-    val v = vecs.select(col("id"), col("emb"), norm2(col("emb")).as("n2"))
-    def assign(centLits: Seq[(Long, Seq[Double])]): DataFrame = {
-      val cands = centLits.map { case (cid, cent) =>
-        val cn2 = cent.foldLeft(0.0)((a, x) => a + x * x)
-        struct(
-          ((col("n2") + lit(cn2)) - lit(2.0) * dot(col("emb"), typedLit(cent)))
-            .as("d2"),
-          lit(cid).as("cid"))
-      }
-      v.withColumn("m", least(cands: _*))
-        .select(col("id"), col("emb"),
-          col("m.cid").as("cluster"), col("m.d2").as("d2"))
-    }
-    def collectCents(df: DataFrame): Seq[(Long, Seq[Double])] =
-      df.select(col("cid"), col("cent")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    var lits = collectCents(v.filter(col("id") < k)
-      .select(col("id").as("cid"), col("emb").as("cent")))
-    var i = 0
-    while (i < iters) {
-      lits = collectCents(kmeansUpdate(assign(lits)))
-      i += 1
-    }
-    assign(lits).select(col("id"), col("cluster"), col("d2"))
-  }
-
-  /** Assign every vector to its nearest centroid of the (cid, cent, c_n2)
-    * frame `cents` — the [[kmeansFit]] assign step as a pure plan:
-    * centroids collapse to one row of k sorted structs, broadcast, and
-    * each vector computes the same lexicographic least() over (d2, cid)
-    * structs the literal-embedded form computed. Missing clusters (an
-    * empty Lloyd cell drops its centroid row) contribute a null struct,
-    * which least() skips — exactly the literal form's behavior of not
-    * emitting a candidate. Returns (id, emb, cluster, d2). */
-  private def kmeansAssignTo(vecs: DataFrame, k: Int,
-      cents: DataFrame): DataFrame = {
-    val v = vecs.select(col("id"), col("emb"), norm2(col("emb")).as("n2"))
-    val carr = cents.agg(array_sort(
-      collect_list(struct(col("cid"), col("cent"), col("c_n2")))).as("carr"))
-    val cands = (0 until k).map { i =>
-      val c = element_at(col("carr"), i + 1)
-      when(lit(i) < size(col("carr")),
-        struct(
-          ((col("n2") + c.getField("c_n2")) -
-            lit(2.0) * dot(col("emb"), c.getField("cent"))).as("d2"),
-          c.getField("cid").as("cid")))
-    }
-    v.crossJoin(broadcast(carr))
-      .withColumn("m", least(cands: _*))
+  /** The one Lloyd assign step: every vector to its nearest centroid of the
+    * (cid, cent, c_n2) frame `cents`, collapsed to one broadcast row. A
+    * dropped (empty) Lloyd cell simply has no row, so it is never chosen.
+    * Returns (id, emb, cluster, d2). */
+  private def kmeansAssignTo(vecs: DataFrame, cents: DataFrame): DataFrame = {
+    val carr = cents.agg(
+      collect_list(struct(col("cid"), col("cent"), col("c_n2"))).as("carr"))
+    vecs.select(col("id"), col("emb")).crossJoin(broadcast(carr))
+      .withColumn("m", graft.functions.VectorExpressions.nearest_centroid(
+        col("emb"), col("carr")))
       .select(col("id"), col("emb"),
         col("m.cid").as("cluster"), col("m.d2").as("d2"))
   }
 
-  /** Final per-vector assignment of [[kmeansFit]]. The trained ≤k-row
-    * centroid frame is STAGED before the assign — several consumers
-    * (semDedupRemovals, clusterNearDupPairs) SELF-JOIN the assignment,
-    * and without the checkpoint the whole nested Lloyd chain sits in
-    * BOTH sides of that join and trains twice per query (measured:
-    * m8 4.6 → 6.3 s, n25 2.8 → 4.0 s, d23b 3.1 → 3.9 s in the round's
-    * first full bench with the unstaged chain; staging restores the
-    * train-once shape at the cost of one ≤k-row action). */
+  /** Final per-vector assignment of [[kmeansFit]], without staging the
+    * centroids: the training chain sits once, in the broadcast side of the
+    * assign. A consumer that reads the assignment twice (the SemDeDup
+    * self-joins) stages the assignment itself. */
   def kmeansAssign(vecs: DataFrame, k: Int, iters: Int): DataFrame =
-    kmeansAssignTo(vecs, k,
-      kmeansCentroids(vecs, k, iters).transform(graft.Tables.stage))
+    kmeansAssignTo(vecs, kmeansCentroids(vecs, k, iters))
       .select(col("id"), col("cluster"), col("d2"))
 
   /** Embedding near-duplicate pairs: cosine ≥ tau. Exact all-pairs form —

@@ -101,11 +101,8 @@ object SimilarityQueries {
     // staged: the a×b in-cluster self-join below consumes the assignment
     // on BOTH sides — materializing the narrow (id, cluster) frame once
     // runs Lloyd + the assign scan once per query (16 B/row; the
-    // "decide with small rows" discipline). LITERAL Lloyd, not the
-    // chained trainer: this query pays the whole training in-query, and
-    // the literal assign's constant-folded codegen halves the per-row
-    // cost of every update stage (see kmeansAssignLits).
-    val assigned = graft.ops.SimilarityOps.kmeansAssignLits(v, KmK, KmIters)
+    // "decide with small rows" discipline).
+    val assigned = graft.ops.SimilarityOps.kmeansAssign(v, KmK, KmIters)
       .select(col("id"), col("cluster"))
       .transform(graft.Tables.stage)
     val av = v.join(assigned, "id")
@@ -164,9 +161,8 @@ object SimilarityQueries {
     }
     // staged for the same both-sides-of-the-self-join reason as
     // semDedupRemovals: Lloyd + assign run once, the join legs read the
-    // 16 B/row checkpoint; literal Lloyd for the same in-query-training
-    // per-row-cost reason (see kmeansAssignLits)
-    val assigned = graft.ops.SimilarityOps.kmeansAssignLits(v, KmK, KmIters)
+    // 16 B/row checkpoint
+    val assigned = graft.ops.SimilarityOps.kmeansAssign(v, KmK, KmIters)
       .select(col("id"), col("cluster"))
       .transform(graft.Tables.stage)
     val av0 = v.join(assigned, "id")
@@ -1307,13 +1303,10 @@ object SimilarityQueries {
     * lookups + 3 adds. */
   /** Argmin PQ code for subspace `m` (ties to the lower codebook position). */
   private[graft] def pqEncodeCol(cbs: Seq[Seq[(Long, Seq[Double], Double)]],
-      m: Int): Column = {
-    val sn2 = norm2(pqSub(m))
-    least(cbs(m).zipWithIndex.map { case ((_, cent, cn2), pos) =>
-      struct(((sn2 + lit(cn2)) - lit(2.0) * dot(pqSub(m), typedLit(cent)))
-        .as("d2"), lit(pos.toLong).as("cid"))
-    }: _*).getField("cid")
-  }
+      m: Int): Column =
+    graft.functions.VectorExpressions.nearest_centroid(pqSub(m),
+      typedLit(cbs(m).zipWithIndex.map { case ((_, cent, cn2), pos) =>
+        (pos.toLong, cent, cn2) })).getField("cid")
 
   /** Per-query ADC distance table for subspace `m` as an array column. */
   private[graft] def pqAdcArr(cbs: Seq[Seq[(Long, Seq[Double], Double)]],

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** Batch-expressible analogs of every STEDI operator (SURVEY.md §2.2-2.5),
   * phrased against the driver corpus so the DuckDB oracle can verify them.
   * The streaming forms of the same transforms are covered by
-  * [[graft.stedi.Transforms]] + ScalaTest (`StediPipelineSpec`).
+  * [[graft.stedi.Transforms]] + ScalaTest (`StediTransformsSpec`,
+  * `StediStreamingSpec`).
   *
   * Every query ends with a deterministic ORDER BY matching its oracle, and
   * every computed column is aliased identically on both sides (driver

@@ -98,7 +98,7 @@ object StreamingCurationChain {
         StreamingNbGate.marginColumn(cfg.nbW, cfg.nbUnseen,
           cfg.nbPriorGap)(toks) > 0)
       .withColumn("winnow_novel", StreamingWinnowGate.novelColumn(
-        StreamingWinnowGate.matchedCount(cfg.bloomWords)(
+        StreamingBloomGate.bloomHits(cfg.bloomWords)(
           StreamingWinnowGate.fpHashArr(toks, col("text")))))
       .withColumn("ntok", size(toks).cast("long"))
       .withColumn("h", md5(col("text").cast("binary")))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.IvfIndex
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ingest-time admission into the persisted IVFADC index
@@ -12,18 +12,19 @@ import org.apache.spark.sql.functions._
   *
   * This is a stream-static composition with the static side folded into
   * the plan: the index's 8 centroids + 64 codebook rows are read once at
-  * stream start and embedded as LITERALS in the projection (the same
-  * shape the batch path uses — `kmeansFit`'s assign step and
-  * `pqEncodeCol`), so per-row work is a fixed arithmetic expression
+  * stream start and embedded as LITERAL centroid arrays, and every argmin
+  * is the one [[graft.functions.VectorExpressions.NearestCentroid]]
+  * kernel that the batch index build runs too (`kmeansFit`'s assign step
+  * and `pqEncodeCol`). Per-row work is a fixed arithmetic expression
   * inside whole-stage codegen: no per-batch join, no state, no shuffle.
   * A stream-static broadcast join would re-deserialize the static side
   * every micro-batch for the same answer.
   *
-  * Exactness: the admission arithmetic is bit-identical to the batch
-  * encode (same literals — doubles roundtrip parquet exactly — same
-  * fold orders, same tie-breaks), so a replay of the corpus through this
-  * stream yields byte-equal rows to the index's own `codes` table;
-  * `StreamingIvfAdmissionSpec` asserts exactly that. Appending the
+  * Exactness: the stream and the batch encode share the kernel and its
+  * inputs (doubles roundtrip parquet exactly, and each literal ‖c‖² is the
+  * same ascending fold `vec_norm2` computes), so a replay of the corpus
+  * through this stream yields byte-equal rows to the index's own `codes`
+  * table; `StreamingIvfAdmissionSpec` asserts exactly that. Appending the
   * emitted rows to `codes/` (partitionBy list_id) is then a pure sink
   * concern — the standard file-sink append the chunk/near-dup gates
   * already demonstrate.
@@ -38,17 +39,13 @@ object StreamingIvfAdmission {
     val cbs = IvfIndex.readCodebooks(s, p)
     val cents = s.read.parquet(p.centroids)
       .select(col("list_id").cast("long"), col("centroid")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    val n2 = graft.functions.VectorExpressions.vec_norm2(col("emb"))
-    val cands: Seq[Column] = cents.map { case (cid, cent) =>
-      val cn2 = cent.foldLeft(0.0)((a, x) => a + x * x)
-      struct(
-        ((n2 + lit(cn2)) - lit(2.0) * graft.functions.VectorExpressions
-          .dot_product(col("emb"), typedLit(cent))).as("d2"),
-        lit(cid).as("cid"))
-    }
+      .map { r =>
+        val cent = r.getSeq[Double](1)
+        (r.getLong(0), cent, cent.foldLeft(0.0)((a, x) => a + x * x))
+      }.toSeq
     vecs.select(col("id").as("vid"),
-      least(cands: _*).getField("cid").as("list_id"),
+      graft.functions.VectorExpressions.nearest_centroid(col("emb"),
+        typedLit(cents)).getField("cid").as("list_id"),
       graft.queries.SimilarityQueries.pqEncodeCol(cbs, 0)
         .cast("tinyint").as("c0"),
       graft.queries.SimilarityQueries.pqEncodeCol(cbs, 1)

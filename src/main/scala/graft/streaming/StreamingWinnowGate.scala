@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingWinnowGate {
   val W = 8
-  val Bits = 65536L
+  val Bits = StreamingBloomGate.Bits
 
   /** Distinct position-free fingerprint hashes of one document. */
   def fpHashArr(toks: Column, text: Column): Column =
@@ -48,19 +48,7 @@ object StreamingWinnowGate {
         expr("shiftleft(CAST(1 AS BIGINT), CAST(b % 32 AS INT))").as("mask"))
       .groupBy(col("word")).agg(bit_or(col("mask")).as("bits"))
 
-  /** Count of this doc's distinct fingerprint hashes whose 3 Bloom bits
-    * are all set — matched ≥ 1 means "not novel, route to dedup". */
-  def matchedCount(words: Seq[Long])(fpArr: Column): Column = {
-    val wordsLit = typedLit(words)
-    val masks = typedLit((0 until 32).map(i => 1L << i))
-    def allSet(h: Column): Column = (1 to 3).map { k =>
-      val b = pmod(TextOps.saltedHash60(h, k), lit(Bits))
-      val wordVal = element_at(wordsLit, (shiftright(b, 5) + 1).cast("int"))
-      val mask = element_at(masks, (pmod(b, lit(32L)) + 1).cast("int"))
-      wordVal.bitwiseAND(mask) =!= lit(0L)
-    }.reduce(_ && _)
-    size(filter(fpArr, allSet _)).cast("long")
-  }
-
+  /** Novel = none of the doc's [[fpHashArr]] hashes hits the Bloom
+    * ([[StreamingBloomGate.bloomHits]]); matched ≥ 1 routes it to dedup. */
   def novelColumn(matched: Column): Column = matched === 0L
 }

@@ -36,26 +36,20 @@ class InProcessLocalFsSpec extends SparkSpecBase {
     // Spark's process-tree metrics fork `getconf PAGESIZE` once per JVM, in
     // the first heartbeat after start-up; run that before recording starts
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
-    // the local profile's state store: a spec that ran earlier on the shared
-    // session may have left RocksDB set, whose every load and commit forks
-    // `rm -rf` on a local working directory
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val leftProvider = spark.conf.getAll.get(providerKey)
-    spark.conf.unset(providerKey)
     val recording = new Recording()
     recording.enable("jdk.ProcessStart").withStackTrace()
     recording.start()
-    try {
+    // the local profile's state store, pinned: RocksDB's every load and
+    // commit forks `rm -rf` on a local working directory
+    try withConf(StateStoreProvider ->
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider") {
       val q = feed.stream(spark).writeStream.format("text")
         .option("path", out)
         .option("checkpointLocation", root.resolve("chk").toString)
         .start()
       try (0 until 3).foreach { b => feed.release(b); q.processAllAvailable() }
       finally q.stop()
-    } finally {
-      recording.stop()
-      leftProvider.foreach(spark.conf.set(providerKey, _))
-    }
+    } finally recording.stop()
     val dump = root.resolve("forks.jfr")
     recording.dump(dump)
     recording.close()

@@ -1,0 +1,59 @@
+package graft
+
+import graft.ops.TextOps.{MinhashP, hash32, hash60, permParams}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+/** Expression-composed reference formulations of the native kernels
+  * (`graft.functions`). Each computes the same math from stock Spark
+  * functions, interpreted; specs assert that the kernels match them bit
+  * for bit. */
+object ReferenceForms {
+
+  /** [[graft.functions.VectorExpressions.DotProduct]]: left fold of aᵢ·bᵢ. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
+
+  /** [[graft.functions.VectorExpressions.VecNorm2]]: left fold of aᵢ². */
+  def norm2Hof(a: Column): Column =
+    aggregate(transform(a, x => x * x), lit(0.0), _ + _)
+
+  /** [[graft.functions.VectorExpressions.NearestCentroid]]: the smallest
+    * `struct(d2, cid)` by `least()` over one candidate per centroid
+    * (cid, cent, ‖cent‖²). */
+  def nearestCentroidLeast(vec: Column, cents: Seq[(Long, Seq[Double], Double)]): Column =
+    least(cents.map { case (cid, cent, cn2) =>
+      struct(((norm2Hof(vec) + lit(cn2)) - lit(2.0) * dotHof(vec, typedLit(cent)))
+        .as("d2"), lit(cid).as("cid"))
+    }: _*)
+
+  /** [[graft.ops.SimilarityOps.lshSignatures]]: one per-table signature
+    * expression per hash table. */
+  def lshSignaturesHof(emb: Column, tables: Int, planes: Int, dims: Int): Column =
+    array((0 until tables).map(t =>
+      graft.ops.SimilarityOps.lshSignature(emb, t, planes, dims)): _*)
+
+  /** [[graft.ops.DedupOps.minhashSignatureNarrow]]: md5 base per shingle,
+    * then `array_min` of each universal-hash permutation. */
+  def minhashSignatureHof(shingleArr: DataFrame, numHashes: Int): DataFrame = {
+    val withBases = shingleArr.withColumn("bases",
+      transform(col("sh_arr"), s => hash32(s)))
+    val mins = (0 until numHashes).map { i =>
+      val (a, b) = permParams(i)
+      array_min(transform(col("bases"), x => (x * a + b) % MinhashP)).as(s"h$i")
+    }
+    withBases.select(col("doc_id") +: mins: _*)
+  }
+
+  /** [[graft.ops.DedupOps.tokenHashes]]. */
+  def tokenHashesHof(toks: Column): Column =
+    transform(array_distinct(toks), t => hash60(t))
+
+  /** [[graft.ops.DedupOps.simhash32]]: 32 when/filter majority terms. */
+  def simhash32Hof(hs: Column): Column =
+    (0 until 32).map { j =>
+      when(lit(2) * size(filter(hs, h =>
+          shiftright(h, j).bitwiseAND(lit(1L)) === 1L)) > size(hs),
+        lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
+}

@@ -21,9 +21,7 @@ class RuntimeFilterSpec extends SparkSpecBase {
       // the application side of the test corpus is far below the 10GB
       // default that gates injection on real clusters
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       val li = Tables.lineitem(spark, sfDir)
       val o = Tables.orders(spark, sfDir)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -34,9 +32,6 @@ class RuntimeFilterSpec extends SparkSpecBase {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("might_contain"),
         s"runtime bloom filter must prune the fact scan; plan:\n${plan.take(2000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -22,9 +22,7 @@ class SkewJoinSpec extends SparkSpecBase {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs.toSeq: _*) {
       // hot key 0 carries 50k rows of INCOMPRESSIBLE padding (skew detection
       // reads compressed shuffle sizes — a constant pad would LZ4 away);
       // 100 cold keys carry 10 rows each
@@ -43,9 +41,6 @@ class SkewJoinSpec extends SparkSpecBase {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"expected a skew-split sort-merge join in the adaptive plan:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -183,34 +183,34 @@ class SourcesSpec extends SparkSpecBase {
     // option("stateVarName") — operational visibility into the burst
     // gate's per-key watermark without stopping the stream
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      graft.streaming.StatefulOps.BurstEvent]
-    val ckpt = Files.createTempDirectory("tws-state-ckpt").toString
-    val out = graft.streaming.StatefulOps
-      .burstCollapseTws(spark, in.toDS(), gapSec = 60)
-    val q = out.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("tws_state_src")
-      .option("checkpointLocation", ckpt).start()
-    val t1 = new java.sql.Timestamp(1704100000000L)
-    val t2 = new java.sql.Timestamp(1704100030000L)
-    try {
-      in.addData(
-        graft.streaming.StatefulOps.BurstEvent(1L, "A", 1L, t1),
-        graft.streaming.StatefulOps.BurstEvent(1L, "A", 2L, t2),
-        graft.streaming.StatefulOps.BurstEvent(2L, "B", 3L, t1))
-      q.processAllAvailable()
-    } finally q.stop()
-    val state = spark.read.format("statestore")
-      .option("stateVarName", "lastMs").load(ckpt)
-    val rows = state
-      .select(col("key.*"), col("value.*"))
-      .collect().map(r => ((r.getLong(0), r.getString(1)), r.getLong(2)))
-      .toMap
-    assert(rows == Map((1L, "A") -> t2.getTime, (2L, "B") -> t1.getTime),
-      s"per-key last-event state must be readable offline: $rows")
+    withConf(RocksDb) {
+      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
+        graft.streaming.StatefulOps.BurstEvent]
+      val ckpt = Files.createTempDirectory("tws-state-ckpt").toString
+      val out = graft.streaming.StatefulOps
+        .burstCollapseTws(spark, in.toDS(), gapSec = 60)
+      val q = out.writeStream
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+        .format("memory").queryName("tws_state_src")
+        .option("checkpointLocation", ckpt).start()
+      val t1 = new java.sql.Timestamp(1704100000000L)
+      val t2 = new java.sql.Timestamp(1704100030000L)
+      try {
+        in.addData(
+          graft.streaming.StatefulOps.BurstEvent(1L, "A", 1L, t1),
+          graft.streaming.StatefulOps.BurstEvent(1L, "A", 2L, t2),
+          graft.streaming.StatefulOps.BurstEvent(2L, "B", 3L, t1))
+        q.processAllAvailable()
+      } finally q.stop()
+      val state = spark.read.format("statestore")
+        .option("stateVarName", "lastMs").load(ckpt)
+      val rows = state
+        .select(col("key.*"), col("value.*"))
+        .collect().map(r => ((r.getLong(0), r.getString(1)), r.getLong(2)))
+        .toMap
+      assert(rows == Map((1L, "A") -> t2.getTime, (2L, "B") -> t1.getTime),
+        s"per-key last-event state must be readable offline: $rows")
+    }
   }
 
   test("partitioned parquet write prunes partitions on read") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpecBase
+import graft.ReferenceForms._
 import graft.ops.DedupOps._
 import graft.ops.TextOps._
 import org.apache.spark.sql.functions._

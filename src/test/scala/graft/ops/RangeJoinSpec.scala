@@ -63,9 +63,8 @@ class RangeJoinSpec extends SparkSpecBase {
       .select(col("signup_id"), col("event_id"))
     val residual = joined.as[(Long, Long)].collect().toSet
     assert(residual.nonEmpty, "fixture must exercise the join")
-    spark.conf.set("spark.graft.rangeJoin.enabled", "true")
-    spark.conf.set("spark.graft.rangeJoin.bucketWidth", (3600L * 1000000L).toString)
-    try {
+    withConf("spark.graft.rangeJoin.enabled" -> "true",
+        "spark.graft.rangeJoin.bucketWidth" -> (3600L * 1000000L).toString) {
       val banded = joined
       val optimized = banded.queryExecution.optimizedPlan.toString
       assert(optimized.contains("__band_bucket") &&
@@ -76,9 +75,6 @@ class RangeJoinSpec extends SparkSpecBase {
       // idempotent under the fixed-point batch: one Generate, not nested
       assert("Generate explode".r.findAllIn(optimized).length == 1,
         s"rule must fire exactly once:\n${optimized.take(1500)}")
-    } finally {
-      spark.conf.unset("spark.graft.rangeJoin.enabled")
-      spark.conf.unset("spark.graft.rangeJoin.bucketWidth")
     }
   }
 

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.{SparkSpecBase, Tables}
+import graft.ReferenceForms._
+import graft.functions.VectorExpressions.nearest_centroid
 import graft.ops.SimilarityOps._
 import org.apache.spark.sql.functions._
 
@@ -78,6 +80,36 @@ class SimilaritySpec extends SparkSpecBase {
       .filter(col("d_native") =!= col("d_hof") ||
         col("n_native") =!= col("n_hof") || col("c_native") =!= col("c_hof"))
     assert(diffs.count() == 0, "native kernels must be bit-identical to HOF math")
+
+    // nearest_centroid ≡ least(struct(d2, cid)), as a literal list and as a
+    // broadcast column, compiled and interpreted
+    val e = vecs.filter(col("id") < 8).orderBy("id").select("emb").as[Seq[Double]].collect()
+    def cent(cid: Long, v: Seq[Double]) = (cid, v, v.foldLeft(0.0)((a, x) => a + x * x))
+    // cid 9 before cid 3 and cid 8 after cid 5 repeat their centroid, so
+    // every vector sees two exact d2 ties, resolved in both list orders
+    val full = cent(9L, e(3)) +: (0 until 8).map(i => cent(i.toLong, e(i))) :+ cent(8L, e(5))
+    // a dropped Lloyd cell: 3 of k = 8 centroids survive
+    val short = Seq(cent(6L, e(6)), cent(1L, e(1)), cent(4L, e(4)))
+    def mismatches(cents: Seq[(Long, Seq[Double], Double)]): Long = {
+      val carr = cents.toDF("cid", "cent", "c_n2")
+        .agg(collect_list(struct(col("cid"), col("cent"), col("c_n2"))).as("carr"))
+      vecs.limit(100).crossJoin(broadcast(carr))
+        .select(nearest_centroid(col("emb"), typedLit(cents)).as("lit"),
+          nearest_centroid(col("emb"), col("carr")).as("arr"),
+          nearestCentroidLeast(col("emb"), cents).as("ref"))
+        .filter(Seq("lit", "arr").map { n =>
+          col(s"$n.d2") =!= col("ref.d2") || col(s"$n.cid") =!= col("ref.cid") ||
+            col(n).isNull
+        }.reduce(_ || _))
+        .count()
+    }
+    for (cents <- Seq(full, short)) {
+      assert(mismatches(cents) == 0, s"nearest_centroid != least() over ${cents.map(_._1)}")
+      withConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        assert(mismatches(cents) == 0, s"interpreted nearest_centroid != least()")
+      }
+    }
   }
 
   test("JL ±1 projection concentrates pairwise distance ratios around 1") {

@@ -21,24 +21,21 @@ class StreamingInfraSpec extends SparkSpecBase {
       .agg(count(lit(1)).as("n"), sum("v").as("total"))
     val ckpt = Files.createTempDirectory("rocksdb-ckpt").toString
     // provider is read from the session conf at query start
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q = agg.writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName("rocks_agg")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      in.addData(("a", 1.0), ("a", 2.0), ("b", 5.0))
-      q.processAllAvailable()
-      in.addData(("a", 3.0))
-      q.processAllAvailable()
-      assert(spark.table("rocks_agg").count() == 2)
-      val a = spark.table("rocks_agg").filter($"k" === "a")
-        .as[(String, Long, Double)].collect()(0)
-      assert(a._2 == 3L && math.abs(a._3 - 6.0) < 1e-9)
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    withConf(RocksDb) {
+      val q = agg.writeStream.outputMode(OutputMode.Complete)
+        .format("memory").queryName("rocks_agg")
+        .option("checkpointLocation", ckpt)
+        .start()
+      try {
+        in.addData(("a", 1.0), ("a", 2.0), ("b", 5.0))
+        q.processAllAvailable()
+        in.addData(("a", 3.0))
+        q.processAllAvailable()
+        assert(spark.table("rocks_agg").count() == 2)
+        val a = spark.table("rocks_agg").filter($"k" === "a")
+          .as[(String, Long, Double)].collect()(0)
+        assert(a._2 == 3L && math.abs(a._3 - 6.0) < 1e-9)
+      } finally q.stop()
     }
   }
 
@@ -52,24 +49,20 @@ class StreamingInfraSpec extends SparkSpecBase {
     val srcDir = Files.createTempDirectory("chlog-src").toString
     val ckpt = Files.createTempDirectory("chlog-ckpt").toString
     val seen = scala.collection.mutable.Map[String, (Long, Double)]()
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    withConf(RocksDb,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+      def writeBatch(rows: Seq[(String, Double)]): Unit =
+        rows.toDF("k", "v").coalesce(1).write.mode("append").parquet(srcDir)
+      def startQuery() = spark.readStream
+        .schema("k STRING, v DOUBLE").parquet(srcDir)
+        .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("total"))
+        .writeStream.outputMode(OutputMode.Update)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          batch.collect().foreach(r => seen(r.getString(0)) = (r.getLong(1), r.getDouble(2)))
+          ()
+        }.start()
 
-    def writeBatch(rows: Seq[(String, Double)]): Unit =
-      rows.toDF("k", "v").coalesce(1).write.mode("append").parquet(srcDir)
-    def startQuery() = spark.readStream
-      .schema("k STRING, v DOUBLE").parquet(srcDir)
-      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("total"))
-      .writeStream.outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.collect().foreach(r => seen(r.getString(0)) = (r.getLong(1), r.getDouble(2)))
-        ()
-      }.start()
-
-    try {
       writeBatch(Seq(("a", 1.0), ("a", 2.0), ("b", 5.0)))
       val q1 = startQuery()
       q1.processAllAvailable()
@@ -94,10 +87,6 @@ class StreamingInfraSpec extends SparkSpecBase {
       val changelogs = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
         .filter(_.toString.endsWith(".changelog")).count()
       assert(changelogs > 0, "changelog checkpointing must write .changelog deltas")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
     }
   }
 

@@ -23,57 +23,57 @@ class StreamingSaxSpec extends SparkSpecBase {
     // the in-order contract the processor documents
     val (b1, b2) = points.splitAt(points.length / 2)
 
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val ctx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[StreamingSax.SaxPoint]
-    val q = StreamingSax.saxWords(spark, in.toDS()).toDF()
-      .writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("sax_words").start()
-    try {
-      in.addData(b1)
-      q.processAllAvailable()
-      in.addData(b2)
-      q.processAllAvailable()
-      val streamed = spark.table("sax_words")
-        .select(col("userId"), col("widx"), col("wordId"))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == expected,
-        s"streamed words must equal batch windows; " +
-          s"only-streamed=${(streamed -- expected).take(3)} " +
-          s"only-batch=${(expected -- streamed).take(3)}")
-    } finally q.stop()
+    withConf(RocksDb) {
+      implicit val ctx = spark.sqlContext
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[StreamingSax.SaxPoint]
+      val q = StreamingSax.saxWords(spark, in.toDS()).toDF()
+        .writeStream
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+        .format("memory").queryName("sax_words").start()
+      try {
+        in.addData(b1)
+        q.processAllAvailable()
+        in.addData(b2)
+        q.processAllAvailable()
+        val streamed = spark.table("sax_words")
+          .select(col("userId"), col("widx"), col("wordId"))
+          .as[(Long, Long, Long)].collect().toSet
+        assert(streamed == expected,
+          s"streamed words must equal batch windows; " +
+            s"only-streamed=${(streamed -- expected).take(3)} " +
+            s"only-batch=${(expected -- streamed).take(3)}")
+      } finally q.stop()
+    }
   }
 
   test("ring state spans batch boundaries: a window straddling batches emits") {
     // 8 points for one user, split 5 + 3 — the lone full window (widx 1)
     // must only emit once batch 2 delivers its 8th point, from the 5
     // ring-carried values plus the new arrivals
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val ctx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[StreamingSax.SaxPoint]
-    val q = StreamingSax.saxWords(spark, in.toDS()).toDF()
-      .writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("sax_straddle").start()
-    val vs = Seq(1.0, 5.0, 2.0, 8.0, 3.0, 9.0, 4.0, 7.0)
-    def pt(i: Int) = StreamingSax.SaxPoint(42L, 1000L + i, i.toLong, vs(i))
-    try {
-      in.addData((0 until 5).map(pt))
-      q.processAllAvailable()
-      assert(spark.table("sax_straddle").isEmpty,
-        "no window is complete after 5 points")
-      in.addData((5 until 8).map(pt))
-      q.processAllAvailable()
-      val rows = spark.table("sax_straddle")
-        .as[StreamingSax.SaxWord].collect().toSeq
-      assert(rows == Seq(StreamingSax.SaxWord(42L, 1L,
-          StreamingSax.wordOf(vs.toIndexedSeq))),
-        s"exactly the straddling window must emit: $rows")
-    } finally q.stop()
+    withConf(RocksDb) {
+      implicit val ctx = spark.sqlContext
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[StreamingSax.SaxPoint]
+      val q = StreamingSax.saxWords(spark, in.toDS()).toDF()
+        .writeStream
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+        .format("memory").queryName("sax_straddle").start()
+      val vs = Seq(1.0, 5.0, 2.0, 8.0, 3.0, 9.0, 4.0, 7.0)
+      def pt(i: Int) = StreamingSax.SaxPoint(42L, 1000L + i, i.toLong, vs(i))
+      try {
+        in.addData((0 until 5).map(pt))
+        q.processAllAvailable()
+        assert(spark.table("sax_straddle").isEmpty,
+          "no window is complete after 5 points")
+        in.addData((5 until 8).map(pt))
+        q.processAllAvailable()
+        val rows = spark.table("sax_straddle")
+          .as[StreamingSax.SaxWord].collect().toSeq
+        assert(rows == Seq(StreamingSax.SaxWord(42L, 1L,
+            StreamingSax.wordOf(vs.toIndexedSeq))),
+          s"exactly the straddling window must emit: $rows")
+      } finally q.stop()
+    }
   }
 }

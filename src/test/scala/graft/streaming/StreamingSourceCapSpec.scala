@@ -16,65 +16,62 @@ class StreamingSourceCapSpec extends SparkSpecBase {
 
   test("streamed source cap replays to batch t56's stats exactly") {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // sf0.01: 500 docs / 20 sources → t56's derived cap = (500·8) div
-    // (10·20) = 20 against ~25 docs per source, so every source evicts
-    val dir = "/root/testdata/sf0.01"
-    val cap = 20
-    val offers = graft.Tables.documents(spark, dir)
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .withColumn("n_tokens", size(col("toks")).cast("long"))
-      .withColumn("n_stop", TextOps.wordSetCount(col("toks"),
-        TextOps.stopwords))
-      .select(col("source"), col("doc_id"),
-        expr("(n_stop * 1000000) div n_tokens").as("q"), col("n_tokens"))
-      .as[(String, Long, Long, Long)].collect()
-      .map { case (s, id, q, nt) =>
-        StreamingSourceCap.CapOffer(s, id, q, nt) }
-      // arrival order decorrelated from both quality and doc_id
-      .sortBy(o => TextOps.hash60Scala(s"order|${o.docId}"))
-    val in = MemoryStream[StreamingSourceCap.CapOffer]
-    val q = StreamingSourceCap.sourceCapTws(spark, in.toDS(), cap)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("source_cap").start()
-    try {
-      val (b1, rest) = offers.splitAt(offers.length / 3)
-      val (b2, b3) = rest.splitAt(rest.length / 2)
-      Seq(b1, b2, b3).foreach { b =>
-        in.addData(b.toSeq); q.processAllAvailable()
-      }
-      val deltas = spark.table("source_cap")
-        .as[StreamingSourceCap.CapDelta].collect()
-      assert(deltas.length == offers.length, "one verdict per arrival")
-      assert(deltas.exists(d => d.admitted && d.evicted >= 0),
-        "eviction must fire on this corpus")
-      assert(deltas.forall(_.size <= cap), "kept set never exceeds cap")
-      // reconstruct the held set: each doc arrives once, so admitted
-      // minus evicted is order-free set arithmetic
-      val byDoc = offers.map(o => o.docId -> o).toMap
-      val streamed = deltas.groupBy(_.source).map { case (s, ds) =>
-        val ids = ds.filter(_.admitted).map(_.docId).toSet --
-          ds.filter(_.evicted >= 0).map(_.evicted).toSet
-        s -> (ids.size.toLong, ids.map(byDoc(_).q).min,
-          ids.toSeq.map(byDoc(_).nTokens).sum)
-      }
-      // the oracle-gated batch op at the same (derived) cap
-      val batch = graft.SparkEntry.queries("t56_source_cap")(spark, dir)
-        .select(col("source"), col("cap"), col("n_kept"), col("q_floor"),
-          col("kept_tokens"))
-        .as[(String, Long, Long, Long, Long)].collect()
-      assert(batch.forall(_._2 == cap),
-        s"spec cap $cap must equal t56's derived cap")
-      batch.foreach { case (s, _, nKept, qFloor, keptTok) =>
-        val (sn, sq, st) = streamed(s)
-        assert((sn, sq, st) == ((nKept, qFloor, keptTok)),
-          s"source $s: streamed ($sn,$sq,$st) != batch t56 " +
-            s"($nKept,$qFloor,$keptTok)")
-      }
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    withConf(RocksDb) {
+      // sf0.01: 500 docs / 20 sources → t56's derived cap = (500·8) div
+      // (10·20) = 20 against ~25 docs per source, so every source evicts
+      val dir = sfDir.replace("sf0.001", "sf0.01")
+      val cap = 20
+      val offers = graft.Tables.documents(spark, dir)
+        .withColumn("toks", TextOps.tokens(col("text")))
+        .withColumn("n_tokens", size(col("toks")).cast("long"))
+        .withColumn("n_stop", TextOps.wordSetCount(col("toks"),
+          TextOps.stopwords))
+        .select(col("source"), col("doc_id"),
+          expr("(n_stop * 1000000) div n_tokens").as("q"), col("n_tokens"))
+        .as[(String, Long, Long, Long)].collect()
+        .map { case (s, id, q, nt) =>
+          StreamingSourceCap.CapOffer(s, id, q, nt) }
+        // arrival order decorrelated from both quality and doc_id
+        .sortBy(o => TextOps.hash60Scala(s"order|${o.docId}"))
+      val in = MemoryStream[StreamingSourceCap.CapOffer]
+      val q = StreamingSourceCap.sourceCapTws(spark, in.toDS(), cap)
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName("source_cap").start()
+      try {
+        val (b1, rest) = offers.splitAt(offers.length / 3)
+        val (b2, b3) = rest.splitAt(rest.length / 2)
+        Seq(b1, b2, b3).foreach { b =>
+          in.addData(b.toSeq); q.processAllAvailable()
+        }
+        val deltas = spark.table("source_cap")
+          .as[StreamingSourceCap.CapDelta].collect()
+        assert(deltas.length == offers.length, "one verdict per arrival")
+        assert(deltas.exists(d => d.admitted && d.evicted >= 0),
+          "eviction must fire on this corpus")
+        assert(deltas.forall(_.size <= cap), "kept set never exceeds cap")
+        // reconstruct the held set: each doc arrives once, so admitted
+        // minus evicted is order-free set arithmetic
+        val byDoc = offers.map(o => o.docId -> o).toMap
+        val streamed = deltas.groupBy(_.source).map { case (s, ds) =>
+          val ids = ds.filter(_.admitted).map(_.docId).toSet --
+            ds.filter(_.evicted >= 0).map(_.evicted).toSet
+          s -> (ids.size.toLong, ids.map(byDoc(_).q).min,
+            ids.toSeq.map(byDoc(_).nTokens).sum)
+        }
+        // the oracle-gated batch op at the same (derived) cap
+        val batch = graft.SparkEntry.queries("t56_source_cap")(spark, dir)
+          .select(col("source"), col("cap"), col("n_kept"), col("q_floor"),
+            col("kept_tokens"))
+          .as[(String, Long, Long, Long, Long)].collect()
+        assert(batch.forall(_._2 == cap),
+          s"spec cap $cap must equal t56's derived cap")
+        batch.foreach { case (s, _, nKept, qFloor, keptTok) =>
+          val (sn, sq, st) = streamed(s)
+          assert((sn, sq, st) == ((nKept, qFloor, keptTok)),
+            s"source $s: streamed ($sn,$sq,$st) != batch t56 " +
+              s"($nKept,$qFloor,$keptTok)")
+        }
+      } finally q.stop()
     }
   }
 

@@ -70,7 +70,7 @@ class StreamingWinnowGateSpec extends SparkSpecBase {
     val in = MemoryStream[(Long, String)]
     val streamed = in.toDF().toDF("doc_id", "text")
       .select(col("doc_id"),
-        StreamingWinnowGate.matchedCount(words)(
+        StreamingBloomGate.bloomHits(words)(
           StreamingWinnowGate.fpHashArr(tokens(col("text")), col("text")))
           .as("matched"))
     val q = streamed.writeStream.outputMode(OutputMode.Append)
@@ -84,7 +84,7 @@ class StreamingWinnowGateSpec extends SparkSpecBase {
       // replay equality: the batch run of the same columns
       val batch = docs.filter(!basePred)
         .select(col("doc_id"),
-          StreamingWinnowGate.matchedCount(words)(
+          StreamingBloomGate.bloomHits(words)(
             StreamingWinnowGate.fpHashArr(tokens(col("text")), col("text")))
             .as("matched"))
         .as[(Long, Long)].collect().toMap
