@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet table loader for the driver-generated TPC-H-ish corpus
   * (`/root/testdata/sf*`, see TESTDATA.md).
@@ -40,11 +41,13 @@ object Tables {
     * stage table to cluster storage instead of pinning executor RAM at
     * 100 TB. */
   def stage[T](ds: Dataset[T]): Dataset[T] =
-    ds.sparkSession.conf.getOption("spark.graft.stageLevel") match {
-      case Some(lvl) => ds.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.fromString(lvl))
-      case None => ds.localCheckpoint(true)
-    }
+    ds.localCheckpoint(true, stageLevel(ds.sparkSession))
+
+  /** `spark.graft.stageLevel` if set, else `MEMORY_AND_DISK` (what an
+    * unlevelled `localCheckpoint` uses); the graph loops' edge lists too. */
+  def stageLevel(s: SparkSession): StorageLevel =
+    s.conf.getOption("spark.graft.stageLevel").map(StorageLevel.fromString)
+      .getOrElse(StorageLevel.MEMORY_AND_DISK)
 
   /** Test hook: pin the fanout partition count while `body` builds plans —
     * partition-invariance property tests run the same query under

@@ -21,25 +21,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   */
 object MinHashKernel {
 
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Static entry shared by interpreted eval and generated code. */
   def signature(shingles: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
     val n = as.length
     val mins = Array.fill(n)(Long.MaxValue)
-    val md = digest.get()
     var i = 0
     val m = shingles.numElements()
     while (i < m) {
-      val s = shingles.getUTF8String(i)
-      md.reset()
-      val h = md.digest(s.getBytes)
-      // first 8 hex chars == first 4 digest bytes, as unsigned 32-bit
-      val base = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-        ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+      val base = TokenHashKernel.hash32(shingles.getUTF8String(i).getBytes)
       var j = 0
       while (j < n) {
         val v = (as(j) * base + bs(j)) % MinhashP

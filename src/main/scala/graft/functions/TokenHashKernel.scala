@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * (`conv(substr(md5(x),1,15),16,10)`): the first 15 hex chars are the first
   * 7 digest bytes plus the high nibble of the 8th. Replaces the interpreted
   * `transform(toks, hash60)` chain feeding SimHash. Equality asserted in
-  * `DedupSpec`. */
+  * `DedupSpec`. Also home of the kernels' one md5 digest: [[hash60]] and
+  * [[hash32]] share it per thread. */
 object TokenHashKernel {
 
   private val digest = new ThreadLocal[java.security.MessageDigest] {
@@ -22,13 +23,19 @@ object TokenHashKernel {
   }
 
   def hash60(bytes: Array[Byte]): Long = {
-    val md = digest.get()
-    md.reset()
-    val h = md.digest(bytes)
+    val h = digest.get().digest(bytes)
     var v = 0L
     var i = 0
     while (i < 7) { v = (v << 8) | (h(i) & 0xffL); i += 1 }
     (v << 4) | ((h(7) & 0xf0L) >>> 4)
+  }
+
+  /** [[graft.ops.TextOps.hash32]] (`conv(substr(md5(x),1,8),16,10)`): the
+    * first 8 hex chars are the first 4 digest bytes, as unsigned 32-bit. */
+  def hash32(bytes: Array[Byte]): Long = {
+    val h = digest.get().digest(bytes)
+    ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
+      ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
   }
 
   /** Distinct-preserving is NOT needed by callers (SimHash counts are over

@@ -40,11 +40,9 @@ object CurationLedger {
   val ChunkTok = 128
   val ChunkStride = 96
 
-  /** d30's decontamination knobs: bench slice, bloom geometry, flag
-    * threshold — verbatim. */
+  /** d30's decontamination knobs: bench slice and flag threshold —
+    * verbatim (the Bloom layout is [[DedupOps.BloomBits]]). */
   val BenchMod = 50
-  val BloomBits = 65536L
-  val BloomSalts = Seq(1, 2, 3)
   val FlagShingles = 3
 
   final case class Stages(raw: DataFrame, s1: DataFrame, s2: DataFrame,
@@ -139,24 +137,9 @@ object CurationLedger {
       raw.select(col("doc_id"), col("text")))
     val benchSh = shAll.filter(col("doc_id") % BenchMod === 0)
       .select(col("sh")).distinct()
-    def bitsOf(df: DataFrame, keep: Seq[Column]) =
-      df.select(keep :+ explode(array(BloomSalts.map(k =>
-          pmod(TextOps.saltedHash60(col("sh"), k), lit(BloomBits))): _*))
-          .as("b"): _*)
-        .select(keep :+ expr("b div 32").as("word") :+
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(b % 32 AS INT))")
-            .as("mask"): _*)
-    val bloom = bitsOf(benchSh, Seq(col("sh"))).drop("sh")
-      .groupBy(col("word")).agg(bit_or(col("mask")).as("bits"))
-    val flagged = bitsOf(
+    val flagged = DedupOps.bloomHitCounts(
         shAll.join(s4.select(col("doc_id")), "doc_id"),
-        Seq(col("doc_id"), col("sh")))
-      .join(broadcast(bloom), Seq("word"), "left")
-      .groupBy(col("doc_id"), col("sh"))
-      .agg(min(when(expr("(coalesce(bits, CAST(0 AS BIGINT)) & mask) <> 0"),
-        1L).otherwise(0L)).as("all_set"))
-      .filter(col("all_set") === 1)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_bloom"))
+        DedupOps.bloomFilter(benchSh, col("sh")))
       .filter(col("n_bloom") >= FlagShingles)
       .select(col("doc_id"))
     val s5 = s4.join(flagged, Seq("doc_id"), "left_anti").transform(graft.Tables.stage)

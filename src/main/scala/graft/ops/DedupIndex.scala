@@ -38,9 +38,10 @@ import org.apache.spark.sql.functions._
   *    them. Serves the residual graph family (d9r/d25r/d29r/d33r/d34/
   *    d36/d42): the collapse is an index build, not a per-report cost.
   *  - `winnow_fp8/`  — (doc_id, fp_hash, fp_pos) MOSS winnowing
-  *    fingerprints at w = [[WinW]] ([[DedupOps.winnowFps]]); serves
-  *    d44/d45's position-aware candidate legs. d43 (the w-sweep TRAINER)
-  *    stays from-scratch — it is to this artifact what n14 is to n15.
+  *    fingerprints at w = [[WinW]] ([[DedupOps.winnowFps]], the
+  *    [[graft.functions.WinnowKernel]] selection); serves d44/d45's
+  *    position-aware candidate legs. d43 (the w-sweep TRAINER) runs the
+  *    same kernel from scratch — it is to this artifact what n14 is to n15.
   *
   * Every persisted frame is a deterministic pure function of the corpus
   * (md5/xxhash-derived hashing, min-label/star CC, window minima), so
@@ -90,7 +91,7 @@ object DedupIndex {
 
   /** Bump on ANY change to what [[build]] writes (knobs, hash family,
     * CC algorithm) — see [[PersistedIndex]]. */
-  val Version = 1
+  val Version = 2
 
   /** ONE chain run → the eight persisted artifacts. Each derived frame
     * is built FROM the already-persisted parquet of its input (not the
@@ -125,7 +126,7 @@ object DedupIndex {
       DedupOps.shingleArrays(ds), NumHashes), p.minhash)
     write(DedupOps.candidatePairs(
       DedupOps.lshBands(sig, Bands, RowsPerBand)), p.candidates)
-    write(DedupOps.winnowFps(DedupOps.winnowKgrams(ds), WinW), p.winnowFp)
+    write(DedupOps.winnowFps(DedupOps.winnowTokens(ds), WinW), p.winnowFp)
     p
   }
 

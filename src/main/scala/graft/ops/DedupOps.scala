@@ -41,6 +41,38 @@ object DedupOps {
       .select(col("doc_id"), explode(shingles(col("toks"), col("text"))).as("sh"))
       .distinct()
 
+  /** d30's Bloom layout (Bloom 1970): 2¹⁶ bits held as 2048 32-bit
+    * words (masks stay below bit 63 — BIGINT shift overflow differs
+    * between engines above it), k = 3 bit positions from the salted md5
+    * family. */
+  val BloomBits = 65536L
+  val BloomSalts = Seq(1, 2, 3)
+
+  /** One (keep…, word, mask) row per Bloom bit of `key`. */
+  private def bloomBitRows(df: DataFrame, key: Column, keep: Column*): DataFrame =
+    df.select(keep :+ explode(array(BloomSalts.map(k =>
+        pmod(saltedHash60(key, k), lit(BloomBits))): _*)).as("b"): _*)
+      .select(keep :+ expr("b div 32").as("word") :+
+        expr("shiftleft(CAST(1 AS BIGINT), CAST(b % 32 AS INT))")
+          .as("mask"): _*)
+
+  /** The filter over `key`: sparse (word, bits = OR of its masks) rows. */
+  def bloomFilter(df: DataFrame, key: Column): DataFrame =
+    bloomBitRows(df, key).groupBy(col("word"))
+      .agg(bit_or(col("mask")).as("bits"))
+
+  /** (doc_id, n_bloom): per doc, the distinct `sh` with all bits set in
+    * `bloom`. A missing word reads as unset bits through the LEFT join (an
+    * INNER join would pass 2-of-2 instead of failing 2-of-3). */
+  def bloomHitCounts(shingled: DataFrame, bloom: DataFrame): DataFrame =
+    bloomBitRows(shingled, col("sh"), col("doc_id"), col("sh"))
+      .join(broadcast(bloom), Seq("word"), "left")
+      .groupBy(col("doc_id"), col("sh"))
+      .agg(min(when(expr("(coalesce(bits, CAST(0 AS BIGINT)) & mask) <> 0"),
+        1L).otherwise(0L)).as("all_set"))
+      .filter(col("all_set") === 1)
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_bloom"))
+
   /** MinHash signature: one row per doc with columns h0..h{n-1}
     * (min over shingles of each salted hash). Partial (map-side) min
     * aggregation → only |docs| × n longs shuffle. */
@@ -246,7 +278,7 @@ object DedupOps {
       maxIters: Int): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(graft.Tables.stageLevel(pairs.sparkSession))
     edges.count()
     var levels = seeds.select(col("doc_id"), lit(0L).as("level"))
       .transform(graft.Tables.stage)
@@ -336,10 +368,7 @@ object DedupOps {
     // recomputed per round. Production CC does exactly this (edges to
     // stable storage first). persist + explicit unpersist (not
     // localCheckpoint) so the big cached table is FREED on return.
-    val stageLvl = pairs.sparkSession.conf
-      .getOption("spark.graft.stageLevel")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stageLvl = graft.Tables.stageLevel(pairs.sparkSession)
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       // pre-partitioned on the per-round join key: InMemoryRelation
@@ -479,10 +508,7 @@ object DedupOps {
     // round), which DOMINATED the small-graph callers — d36's four
     // contraction sweeps spent ~60 driver-latency-bound stages on ≤60k-
     // edge graphs.
-    val stageLvl = pairs.sparkSession.conf
-      .getOption("spark.graft.stageLevel")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stageLvl = graft.Tables.stageLevel(pairs.sparkSession)
     var e = pairs
       .select(least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
@@ -689,7 +715,7 @@ object DedupOps {
       damping: Double = 0.85): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(graft.Tables.stageLevel(pairs.sparkSession))
     edges.count()
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("degree"))
     var ranks = docs.select(col("doc_id"), lit(1.0).as("rank"))
@@ -753,7 +779,7 @@ object DedupOps {
       r0: Column, teleport: Column): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(graft.Tables.stageLevel(pairs.sparkSession))
     edges.count()
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("degree"))
     var ranks = docs.select(col("doc_id"), r0.as("rank_ppb"))
@@ -929,28 +955,6 @@ object DedupOps {
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
         levenshtein(col("ta"), col("tb")).cast("long").as("dist"))
       .filter(col("dist") <= k)
-  }
-
-  /** d43's winnowing fingerprint selection as a PER-ROW higher-order
-    * function (no Window, no explode — the ingest-friendly form: a
-    * document's fingerprints depend only on its own tokens, so a stream
-    * can fingerprint at arrival with zero state). Returns the distinct
-    * combined keys `hash32(4gram)·2²¹ + (2²⁰ − pos)` of each window's
-    * (min-hash, rightmost-pos) selection — bijective with d43's
-    * (fp_hash, fp_pos) pairs; `key >> 21` recovers the position-free
-    * fingerprint hash. Equality with the batch window form is asserted
-    * in `StreamingWinnowGateSpec`. */
-  def winnowKeys(toks: Column, text: Column, w: Int): Column = {
-    val kgarr = when(size(toks) >= 4,
-      transform(sequence(lit(1), size(toks) - 3), i =>
-        concat_ws(" ", element_at(toks, i), element_at(toks, i + 1),
-          element_at(toks, i + 2), element_at(toks, i + 3))))
-      .otherwise(array(trim(text)))
-    val keys = transform(kgarr, (g, i) =>
-      hash32(g) * lit(2097152L) + (lit(1048576L) - i - 1))
-    val n = size(keys)
-    array_distinct(transform(sequence(least(lit(w), n), n), e =>
-      array_min(slice(keys, greatest(e - w + 1, lit(1)), least(lit(w), e)))))
   }
 
   /** Distinct-token 60-bit hash array (materialize once — md5 per token is
@@ -1245,65 +1249,25 @@ object DedupOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Winnowing k-gram combined-key table (Schleimer/Wilkerson/Aiken
-    * SIGMOD 2003 — MOSS): (doc_id, n_kg, pos, key) with key =
-    * hash·2²¹ + (2²⁰ − pos0 − 1), so one BIGINT `min` picks (min hash,
-    * rightmost position) simultaneously — hash < 2³², pos < 2²⁰, so the
-    * key stays under 2⁵³. Checkpointed: d43 re-windows it per sweep
-    * point; [[DedupIndex.build]] fingerprints it at w=8. */
-  def winnowKgrams(ds: DataFrame): DataFrame = {
-    val p = ds.sparkSession.sparkContext.defaultParallelism
-    // Catalyst pushes deterministic projections THROUGH a repartition,
-    // so without a barrier the interpreted-HOF k-gram build + per-gram
-    // md5 land on the exchange's MAP side — ONE task when the input is
-    // a single parquet file (measured: a 10 s single-task stage under
-    // d43/d45; the 32-task stage after it read pre-computed rows).
-    // Materializing the cheap tokenized frame right after the exchange
-    // pins the heavy explode onto the 32-way checkpoint scan
-    // (measured: the kg materialization falls ~13 s → ~1.2 s).
-    val toksd = ds.repartition(p, col("doc_id"))
+  /** Winnowing's kernel arguments (doc_id, toks = tokens(text), t =
+    * trim(text)), fanned out first: a single-file corpus would otherwise
+    * tokenize and winnow on the one task that scans it. */
+  def winnowTokens(ds: DataFrame): DataFrame =
+    graft.Tables.fanout(ds)
       .select(col("doc_id"), tokens(col("text")).as("toks"),
         trim(col("text")).as("t"))
-      .transform(graft.Tables.stage)
-    val kgarr = when(size(col("toks")) >= 4,
-      transform(sequence(lit(1), size(col("toks")) - 3), i =>
-        concat_ws(" ", element_at(col("toks"), i),
-          element_at(col("toks"), i + 1), element_at(col("toks"), i + 2),
-          element_at(col("toks"), i + 3))))
-      .otherwise(array(col("t")))
-    toksd.select(col("doc_id"), kgarr.as("kgarr"))
-      .select(col("doc_id"), size(col("kgarr")).cast("long").as("n_kg"),
-        posexplode(col("kgarr")).as(Seq("pos0", "g")))
-      .select(col("doc_id"), col("n_kg"), (col("pos0") + 1).as("pos"),
-        (hash32(col("g")) * 2097152L + (lit(1048576L) - col("pos0") - 1))
-          .as("key"))
-      .transform(graft.Tables.stage)
-  }
 
-  /** Winnowing fingerprint selection at window w over [[winnowKgrams]]:
-    * distinct (doc_id, fp_hash, fp_pos) — a per-doc ROWS window, so the
-    * selection is embarrassingly parallel. Checkpointed: consumers read
-    * it two or three times (density agg, cull agg, pair join). */
-  def winnowFps(kg: DataFrame, w: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = kg.sparkSession.sparkContext.defaultParallelism
-    val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(-(w - 1), 0)
-    // PIN the window exchange: fingerprint rows are byte-light (3
-    // longs) but the window + distinct are compute-heavy, and AQE's
-    // byte-based coalesce plans them onto ONE task (the d20/d5 pinned-
-    // exchange lesson — measured: a single 9.9 s straggler stage under
-    // d45). HashPartitioning(doc_id) also satisfies the distinct's
-    // clustering (doc_id ⊂ the distinct keys), so one exchange serves
-    // both.
-    kg.repartition(p, col("doc_id"))
-      .withColumn("mk", min(col("key")).over(win))
-      .filter(col("pos") >= least(lit(w.toLong), col("n_kg")))
+  /** MOSS winnowing fingerprints at window w over [[winnowTokens]]: one
+    * (doc_id, fp_hash, fp_pos) row per distinct window minimum
+    * ([[graft.functions.WinnowKernel]]; per doc, so no shuffle). Staged:
+    * consumers read it two or three times. */
+  def winnowFps(toks: DataFrame, w: Int): DataFrame =
+    toks.select(col("doc_id"),
+        explode(graft.functions.WinnowKernel.winnow_keys(col("toks"),
+          col("t"), w)).as("mk"))
       .select(col("doc_id"), expr("mk div 2097152").as("fp_hash"),
         expr("1048576 - (mk % 2097152)").as("fp_pos"))
-      .dropDuplicates()
       .transform(graft.Tables.stage)
-  }
 
   /** Fingerprint match pairs through the culled index: hashes in more
     * than `maxDocs` docs dropped first (MOSS's boilerplate cull — it

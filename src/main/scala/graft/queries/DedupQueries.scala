@@ -188,10 +188,9 @@ object DedupQueries {
 
   /** Winnowing fingerprints at the persisted w=8 grain, served from
     * [[graft.ops.DedupIndex]] — d44/d45's position-aware candidate leg.
-    * d43 (the w-sweep trainer) keeps the from-scratch
-    * [[graft.ops.DedupOps.winnowKgrams]]/[[graft.ops.DedupOps.winnowFps]]
-    * chain: it is to this artifact what n14's training is to n15's
-    * serving. */
+    * d43 (the w-sweep trainer) selects from scratch through the same
+    * [[graft.ops.DedupOps.winnowFps]]: it is to this artifact what n14's
+    * training is to n15's serving. */
   private def servedWinnowFp8(s: SparkSession, d: String): DataFrame =
     graft.ops.DedupIndex.winnowFpDf(s, graft.ops.DedupIndex.ensure(s, d))
 
@@ -1132,15 +1131,18 @@ object DedupQueries {
     // band-bucket argument). Ties inside a window need one combined
     // key: hash·2²¹ + (2²⁰ − pos) makes one BIGINT min pick (min hash,
     // rightmost pos) simultaneously — hash < 2³², pos < 2²⁰, so the key
-    // stays under 2⁵³. Scale: the selection is a per-doc ROWS window
-    // (doc-partitioned — embarrassingly parallel), the sweep re-windows
-    // the checkpointed hash table without re-hashing, and the pair join
-    // is capped per bucket; nothing exceeds |tokens| rows.
+    // stays under 2⁵³. Scale: the selection is one per-doc kernel call
+    // (graft.functions.WinnowKernel — no shuffle, embarrassingly
+    // parallel), the sweep re-runs it per w over the checkpointed
+    // tokenized docs, and the pair join is capped per bucket; nothing
+    // exceeds |tokens| rows.
     "d43_winnowing" -> ((s, d) => {
-      val kg = winnowKgrams(docs(s, d))
-      val nKg = kg.agg(count(lit(1)).as("n_kgrams"))
+      val toks = winnowTokens(Tables.documents(s, d))
+        .transform(graft.Tables.stage)
+      val nKg = toks.agg(
+        sum(greatest(size(col("toks")) - 3, lit(1))).as("n_kgrams"))
       val rows = WinWs.map { w =>
-        val fp = winnowFps(kg, w)
+        val fp = winnowFps(toks, w)
         val (byHash, pairFrame) = winnowPairFrame(fp, WinMaxDocs)
         val pairs = pairFrame
           .agg(count(lit(1)).as("n_pairs"),
@@ -1248,24 +1250,7 @@ object DedupQueries {
       val exact = train.join(benchSh, Seq("sh"), "left_semi")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_exact"))
       val own = train.groupBy(col("doc_id")).agg(count(lit(1)).as("n_own"))
-      // d30's Bloom probe (2048×32-bit words, k=3 salted bits)
-      val ks = Seq(1, 2, 3)
-      def bitsOf(df: DataFrame,
-          keep: Seq[org.apache.spark.sql.Column]) =
-        df.select(keep :+ explode(array(ks.map(k =>
-            pmod(saltedHash60(col("sh"), k), lit(65536L))): _*)).as("b"): _*)
-          .select(keep :+ expr("b div 32").as("word") :+
-            expr("shiftleft(CAST(1 AS BIGINT), CAST(b % 32 AS INT))")
-              .as("mask"): _*)
-      val bloom = bitsOf(benchSh, Seq(col("sh"))).drop("sh")
-        .groupBy(col("word")).agg(bit_or(col("mask")).as("bits"))
-      val bloomHits = bitsOf(train, Seq(col("doc_id"), col("sh")))
-        .join(broadcast(bloom), Seq("word"), "left")
-        .groupBy(col("doc_id"), col("sh"))
-        .agg(min(when(expr("(coalesce(bits, CAST(0 AS BIGINT)) & mask) <> 0"),
-          1L).otherwise(0L)).as("all_set"))
-        .filter(col("all_set") === 1)
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_bloom"))
+      val bloomHits = bloomHitCounts(train, bloomFilter(benchSh, col("sh")))
       // MOSS winnowing-fingerprint overlap (w=8, the persisted index)
       val fps = servedWinnowFp8(s, d)
       val benchFp = fps.filter(benchPred).select(col("fp_hash")).distinct()
@@ -1427,11 +1412,10 @@ object DedupQueries {
 
     // Bloom-filter decontamination — d14's scan with BOUNDED benchmark
     // state (Bloom 1970). The benchmark split's distinct shingles
-    // compress into a 2^16-bit filter held as 2048 32-bit words (bit
-    // masks stay below bit 63 — BIGINT shift overflow differs between
-    // engines above it), k=3 bit positions from the salted md5 family.
-    // At 100 TB the exact d14 join shuffles every training shingle
-    // against the benchmark table; here the ~16 KB word table BROADCASTS
+    // compress into DedupOps' 2^16-bit filter (2048 32-bit words, k=3
+    // salted md5 bit positions). At 100 TB the exact d14 join shuffles
+    // every training shingle against the benchmark table; here the
+    // ~16 KB word table BROADCASTS
     // into the training scan and the probe is three bit tests per
     // shingle — the benchmark side never shuffles at all. Error is
     // one-sided by construction (a contaminated shingle always finds its
@@ -1439,31 +1423,12 @@ object DedupQueries {
     // in the bloom-positive set is what the n_fp ≥ 0 column shows), and
     // the false-positive cost is MEASURED per doc against the exact d14
     // truth riding along (d19/n12/q74 self-evaluation discipline).
-    // Missing-word probes resolve through the LEFT join to unset bits —
-    // an INNER join would silently shrink the per-shingle test count and
-    // pass 2-of-2 instead of failing 2-of-3.
     "d30_bloom_decontaminate" -> ((s, d) => {
       val sh = explodedShingles(docs(s, d))
       val benchPred = col("doc_id") % 50 === 0
       val train = sh.filter(!benchPred)
       val benchSh = sh.filter(benchPred).select(col("sh")).distinct()
-      val ks = Seq(1, 2, 3)
-      def bitsOf(df: DataFrame, keep: Seq[org.apache.spark.sql.Column]) =
-        df.select(keep :+ explode(array(ks.map(k =>
-            pmod(saltedHash60(col("sh"), k), lit(65536L))): _*)).as("b"): _*)
-          .select(keep :+ expr("b div 32").as("word") :+
-            expr("shiftleft(CAST(1 AS BIGINT), CAST(b % 32 AS INT))")
-              .as("mask"): _*)
-      val bloom = bitsOf(benchSh, Seq(col("sh"))).drop("sh")
-        .groupBy(col("word")).agg(bit_or(col("mask")).as("bits"))
-      val pos = bitsOf(train, Seq(col("doc_id"), col("sh")))
-        .join(broadcast(bloom), Seq("word"), "left")
-        .groupBy(col("doc_id"), col("sh"))
-        .agg(min(when(expr("(coalesce(bits, CAST(0 AS BIGINT)) & mask) <> 0"),
-          1L).otherwise(0L)).as("all_set"))
-        .filter(col("all_set") === 1)
-      val bloomHits = pos.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bloom"))
+      val bloomHits = bloomHitCounts(train, bloomFilter(benchSh, col("sh")))
       val exact = train.join(benchSh, "sh").groupBy(col("doc_id"))
         .agg(countDistinct(col("sh")).as("n_exact"))
       bloomHits.join(exact, Seq("doc_id"), "left")
@@ -1664,8 +1629,9 @@ object DedupQueries {
        |shingled AS (
        |  SELECT DISTINCT doc_id, unnest(shingles) AS sh FROM sh1)""".stripMargin
 
-  /** d43/d44's k-gram combined-key table CTEs (toksd → kgs → kg):
-    * DuckDB mirror of [[winnowKgrams]]. */
+  /** d43/d44's k-gram combined-key table CTEs (toksd → kgs → kg): one
+    * row per k-gram key that [[graft.functions.WinnowKernel]] computes
+    * inside each document. */
   private val dkWinnowKgCtes: String =
     s"""toksd AS (
        |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks,
@@ -1688,7 +1654,9 @@ object DedupQueries {
        |    generate_subscripts(kgarr, 1) AS pos) u)""".stripMargin
 
   /** Winnowing selection + culled pair join at window `w` over `kg`
-    * (win$w → fp$w → keep$w → pr$w): DuckDB mirror of [[winnowFps]] +
+    * (win$w → fp$w → keep$w → pr$w): the kernel's window minima as a
+    * ROWS window (the formulation `graft.ReferenceForms.winnowKeysWindow`
+    * checks the kernel against), then [[winnowFps]]' columns and
     * [[winnowPairFrame]]. */
   private def dkWinnowChain(w: Int): String =
     s"""win$w AS (

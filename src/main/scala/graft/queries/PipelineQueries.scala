@@ -980,8 +980,8 @@ object PipelineQueries {
   private lazy val p1ChainSql: String = {
       import graft.queries.DedupQueries.{JaccardTau, dkMinhashCandCtes}
       val tau = JaccardTau
-      val salts = graft.ops.CurationLedger.BloomSalts
-      val bloomBits = graft.ops.CurationLedger.BloomBits
+      val salts = graft.ops.DedupOps.BloomSalts
+      val bloomBits = graft.ops.DedupOps.BloomBits
       def bitsSel(src: String, cols: String) = salts.map { k =>
         s"""SELECT $cols,
            |  ('0x' || substr(md5('$k|' || sh), 1, 15))::BIGINT % $bloomBits AS b

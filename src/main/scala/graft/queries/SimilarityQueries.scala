@@ -1295,12 +1295,6 @@ object SimilarityQueries {
     fits.map(Await.result(_, Duration.Inf))
   }
 
-  /** Encode every vector to [[PqM]] one-byte codes (argmin d² per subspace,
-    * ties to the lower codebook POSITION — positions are the sorted-by-cid
-    * order, so fixed codebooks keep n11's exact tie behavior and trained
-    * codebooks with dropped clusters stay dense) and rank ADC distances:
-    * per-query distance tables broadcast as array columns, scoring = 4
-    * lookups + 3 adds. */
   /** Argmin PQ code for subspace `m` (ties to the lower codebook position). */
   private[graft] def pqEncodeCol(cbs: Seq[Seq[(Long, Seq[Double], Double)]],
       m: Int): Column =
@@ -1317,6 +1311,13 @@ object SimilarityQueries {
     }: _*)
   }
 
+  /** Encode every vector of `v` to [[PqM]] one-byte codes
+    * ([[pqEncodeCol]]: argmin d² per subspace, ties to the lower codebook
+    * POSITION — positions are the sorted-by-cid order, so fixed codebooks
+    * keep n11's exact tie behavior and trained codebooks with dropped
+    * clusters stay dense) and rank ADC distances: per-query distance
+    * tables ([[pqAdcArr]]) broadcast as array columns, scoring = 4
+    * lookups + 3 adds. */
   private[graft] def pqAdcTopK(v: DataFrame,
       cbs: Seq[Seq[(Long, Seq[Double], Double)]]): DataFrame = {
     import org.apache.spark.sql.expressions.Window

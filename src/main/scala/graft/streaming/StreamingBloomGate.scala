@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.DedupOps.{BloomBits, BloomSalts}
 import graft.ops.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -18,14 +19,13 @@ import org.apache.spark.sql.functions._
   * re-ships per batch, and per-doc cost is independent of corpus size.
   */
 object StreamingBloomGate {
-  val Bits = 65536L
-
-  /** Dense word table from d30's sparse (word, bits) rows — missing words
-    * carry 0, mirroring d30's LEFT-join-to-unset-bits semantics. */
+  /** Dense word table from d30's sparse (word, bits) rows
+    * ([[graft.ops.DedupOps.bloomFilter]]) — missing words carry 0,
+    * mirroring d30's LEFT-join-to-unset-bits semantics. */
   def denseWords(bloom: DataFrame): Seq[Long] = {
     val m = bloom.select(col("word"), col("bits")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (0L until Bits / 32).map(w => m.getOrElse(w, 0L))
+    (0L until BloomBits / 32).map(w => m.getOrElse(w, 0L))
   }
 
   /** Count of distinct shingles in `shArr` whose k=1..3 Bloom bits are all
@@ -33,8 +33,8 @@ object StreamingBloomGate {
   def bloomHits(words: Seq[Long])(shArr: Column): Column = {
     val wordsLit = typedLit(words)
     val masks = typedLit((0 until 32).map(i => 1L << i))
-    def allSet(sh: Column): Column = (1 to 3).map { k =>
-      val b = pmod(TextOps.saltedHash60(sh, k), lit(Bits))
+    def allSet(sh: Column): Column = BloomSalts.map { k =>
+      val b = pmod(TextOps.saltedHash60(sh, k), lit(BloomBits))
       val wordVal = element_at(wordsLit, (shiftright(b, 5) + 1).cast("int"))
       val mask = element_at(masks, (pmod(b, lit(32L)) + 1).cast("int"))
       wordVal.bitwiseAND(mask) =!= lit(0L)

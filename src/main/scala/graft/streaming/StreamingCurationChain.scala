@@ -73,7 +73,7 @@ object StreamingCurationChain {
         graft.ops.DedupIndex.ensure(s, sfDir))
       .filter(basePred).select(col("fp_hash")).distinct()
     val words = StreamingBloomGate.denseWords(
-      StreamingWinnowGate.fingerprintBloom(baseFp))
+      graft.ops.DedupOps.bloomFilter(baseFp, col("fp_hash")))
     GateConfig(w, unseen, priorGap, words,
       StreamingMinKGate.literalsFrom(s, sfDir))
   }

@@ -353,4 +353,75 @@ class PlanGuardSpec extends SparkSpecBase {
       || p.contains("WindowGroupLimit"),
       s"t44's selection ranks lost the bounded-top-k prune:\n$p")
   }
+
+  /** Optimized plans of `build`'s frame and of every frame it staged
+    * (`Tables.stage` is an eager action, so a staged frame's plan reaches
+    * only the session's execution listeners). */
+  private def optimizedPlans(build: => org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "plan_guard_marker"
+    val seen = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.put(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = build
+      // listener events arrive in order: once the marker's has, so has
+      // every staged frame's
+      spark.range(1).select(lit(1).as(marker)).collect()
+      val staged = Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .takeWhile(qe => qe != null && !qe.analyzed.output.exists(_.name == marker))
+        .map(_.optimizedPlan).toSeq
+      staged :+ df.queryExecution.optimizedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("no lambda body re-runs loop-invariant md5, regexp or HOF work per element") {
+    // Catalyst evaluates a lambda body once per array element. A subtree
+    // in it that references none of the enclosing lambdas' variables
+    // computes the same value on every call: the per-row winnowing form
+    // this replaced inlined its k-gram key array (one md5 per k-gram)
+    // into the per-window lambda, so md5 re-ran for every window — 87 s
+    // against 2.6 s over 500 docs. Checked on the winnowing consumers
+    // (the curation gate battery, d43, the DedupIndex fingerprint build)
+    // and every frame they stage.
+    import org.apache.spark.sql.catalyst.expressions._
+    def heavy(e: Expression): Boolean = e match {
+      case _: Md5 | _: StringSplit | _: RLike | _: RegExpReplace |
+          _: RegExpExtractBase | _: HigherOrderFunction => true
+      case _ => false
+    }
+    def invariant(e: Expression, scope: Set[ExprId]): Seq[Expression] = e match {
+      case l: LambdaFunction =>
+        invariant(l.function, scope ++ l.arguments.map(_.exprId))
+      case _ if scope.nonEmpty && heavy(e) && !e.exists {
+          case v: NamedLambdaVariable => scope(v.exprId)
+          case _ => false
+        } => Seq(e)
+      case _ => e.children.flatMap(invariant(_, scope))
+    }
+    val basePred = col("doc_id") % 50 === 0
+    val docs = Tables.documents(spark, sfDir).filter(!basePred)
+    val cfg = streaming.StreamingCurationChain.config(spark, sfDir, basePred)
+    val sites = Seq(
+      "curation gate frame" -> (() => streaming.StreamingCurationChain
+        .gateFrame(cfg)(docs.select(col("doc_id"), col("lang"), col("text")))),
+      "d43_winnowing" -> (() => SparkEntry.queries("d43_winnowing")(spark, sfDir)),
+      "DedupOps.winnowFps" -> (() => ops.DedupOps.winnowFps(
+        ops.DedupOps.winnowTokens(docs), ops.DedupIndex.WinW)))
+    sites.foreach { case (name, build) =>
+      val plans = optimizedPlans(build())
+      val exprs = plans.flatMap(_.collect { case n => n.expressions }.flatten)
+      val found = exprs.flatMap(invariant(_, Set.empty))
+      assert(found.isEmpty, s"$name re-runs loop-invariant work per " +
+        s"lambda element:\n${found.map(_.sql.take(300)).mkString("\n")}")
+      assert(exprs.exists(_.exists(_.isInstanceOf[
+          graft.functions.WinnowKernel.WinnowKeys])),
+        s"$name: no winnow_keys call among ${plans.size} plans")
+    }
+  }
 }

@@ -45,6 +45,34 @@ object ReferenceForms {
     withBases.select(col("doc_id") +: mins: _*)
   }
 
+  /** [[graft.functions.WinnowKernel]] over a `(doc_id, text)` frame as
+    * d43's batch window form, the one the DuckDB `dkWinnowChain` mirrors:
+    * posexploded k-gram keys, a per-doc ROWS window min kept where
+    * `pos >= least(w, n_kg)`, distinct (doc_id, mk). */
+  def winnowKeysWindow(docs: DataFrame, w: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.ops.TextOps.tokens
+    val toksd = docs.select(col("doc_id"), tokens(col("text")).as("toks"),
+      trim(col("text")).as("t"))
+    val kgarr = when(size(col("toks")) >= 4,
+      transform(sequence(lit(1), size(col("toks")) - 3), i =>
+        concat_ws(" ", element_at(col("toks"), i),
+          element_at(col("toks"), i + 1), element_at(col("toks"), i + 2),
+          element_at(col("toks"), i + 3))))
+      .otherwise(array(col("t")))
+    val kg = toksd.select(col("doc_id"), kgarr.as("kgarr"))
+      .select(col("doc_id"), size(col("kgarr")).cast("long").as("n_kg"),
+        posexplode(col("kgarr")).as(Seq("pos0", "g")))
+      .select(col("doc_id"), col("n_kg"), (col("pos0") + 1).as("pos"),
+        (hash32(col("g")) * 2097152L + (lit(1048576L) - col("pos0") - 1))
+          .as("key"))
+    val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(-(w - 1), 0)
+    kg.withColumn("mk", min(col("key")).over(win))
+      .filter(col("pos") >= least(lit(w.toLong), col("n_kg")))
+      .select(col("doc_id"), col("mk")).distinct()
+  }
+
   /** [[graft.ops.DedupOps.tokenHashes]]. */
   def tokenHashesHof(toks: Column): Column =
     transform(array_distinct(toks), t => hash60(t))

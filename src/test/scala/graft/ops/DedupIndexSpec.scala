@@ -71,7 +71,7 @@ class DedupIndexSpec extends SparkSpecBase {
   }
 
   test("served winnow fingerprints ≡ the from-scratch w=8 selection") {
-    val scratch = winnowFps(winnowKgrams(docs), DedupIndex.WinW)
+    val scratch = winnowFps(winnowTokens(docs), DedupIndex.WinW)
     assert(sorted(DedupIndex.winnowFpDf(spark, ix)) == sorted(scratch))
     assert(DedupIndex.winnowFpDf(spark, ix).count() > 0)
   }

@@ -1,14 +1,15 @@
 package graft.streaming
 
-import graft.SparkSpecBase
+import graft.{ReferenceForms, SparkSpecBase}
+import graft.functions.WinnowKernel.winnow_keys
 import graft.ops.DedupOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** The streamed winnowing novelty gate: the per-row HOF fingerprint
-  * selection must equal d43's batch window form key-for-key, and the
-  * gate's replay must agree with the batch computation — including the
+/** The streamed winnowing novelty gate: the native `winnow_keys` kernel
+  * must equal d43's batch window form key-for-key, and the gate's replay
+  * must agree with the batch computation — including the
   * no-false-negative contract against exact fingerprint matches. */
 class StreamingWinnowGateSpec extends SparkSpecBase {
   import spark.implicits._
@@ -16,41 +17,36 @@ class StreamingWinnowGateSpec extends SparkSpecBase {
   private def docs = graft.Tables.documents(spark, sfDir)
     .select(col("doc_id"), col("text"))
 
-  /** d43's Window-based fingerprint keys at w (the batch form). */
-  private def windowKeys(w: Int) = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.ops.TextOps.{hash32, tokens}
-    val toksd = docs.select(col("doc_id"), tokens(col("text")).as("toks"),
-      trim(col("text")).as("t"))
-    val kgarr = when(size(col("toks")) >= 4,
-      transform(sequence(lit(1), size(col("toks")) - 3), i =>
-        concat_ws(" ", element_at(col("toks"), i),
-          element_at(col("toks"), i + 1), element_at(col("toks"), i + 2),
-          element_at(col("toks"), i + 3))))
-      .otherwise(array(col("t")))
-    val kg = toksd.select(col("doc_id"), kgarr.as("kgarr"))
-      .select(col("doc_id"), size(col("kgarr")).cast("long").as("n_kg"),
-        posexplode(col("kgarr")).as(Seq("pos0", "g")))
-      .select(col("doc_id"), col("n_kg"), (col("pos0") + 1).as("pos"),
-        (hash32(col("g")) * 2097152L + (lit(1048576L) - col("pos0") - 1))
-          .as("key"))
-    val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(-(w - 1), 0)
-    kg.withColumn("mk", min(col("key")).over(win))
-      .filter(col("pos") >= least(lit(w.toLong), col("n_kg")))
-      .select(col("doc_id"), col("mk")).distinct()
-  }
-
-  test("per-row HOF fingerprints equal the batch window form key-for-key") {
+  test("winnow_keys kernel equals d43's window form key-for-key") {
     import graft.ops.TextOps.tokens
-    val hof = docs.select(col("doc_id"),
-        explode(DedupOps.winnowKeys(tokens(col("text")), col("text"),
-          StreamingWinnowGate.W)).as("mk"))
-      .distinct().as[(Long, Long)].collect().toSet
-    val win = windowKeys(StreamingWinnowGate.W)
-      .as[(Long, Long)].collect().toSet
-    assert(hof == win)
-    assert(hof.nonEmpty)
+    val sf01 = graft.Tables.documents(spark, sfDir.replace("sf0.001", "sf0.01"))
+      .select(col("doc_id"), col("text"))
+    // 0–3 tokens (the whole-text k-gram, internal runs of spaces kept),
+    // exactly 4, fewer k-grams than w, repeated k-grams, multibyte text,
+    // and tab/newline separators that `trim` keeps but `tokens` splits on
+    val edge = Seq("", "   ", "alpha", "alpha beta", "  alpha   beta gamma  ",
+        "one two three four", "a b c d e f", "x y z w " * 10, "la " * 12,
+        "naïve café 日本語 テキスト straße ünïcödé 🙂 émoji déjà vu",
+        "\ttab\tseparated and\nnewline text here")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def kernel(ds: org.apache.spark.sql.DataFrame, w: Int) =
+      ds.select(col("doc_id"), explode(winnow_keys(tokens(col("text")),
+          trim(col("text")), w)).as("mk"))
+        .as[(Long, Long)].collect().toSeq
+    for (ds <- Seq(sf01, edge); w <- Seq(1, 4, StreamingWinnowGate.W, 16)) {
+      val window = ReferenceForms.winnowKeysWindow(ds, w)
+        .as[(Long, Long)].collect().toSet
+      assert(window.nonEmpty)
+      val compiled = kernel(ds, w)
+      // distinct per doc already: no key repeats within a row
+      assert(compiled.size == compiled.toSet.size, s"repeated keys at w=$w")
+      assert(compiled.toSet == window, s"kernel != window form at w=$w")
+      withConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        assert(kernel(ds, w).sorted == compiled.sorted,
+          s"interpreted != compiled at w=$w")
+      }
+    }
   }
 
   test("streamed novelty gate replays to the batch flags; exact matches never pass") {
@@ -62,7 +58,7 @@ class StreamingWinnowGateSpec extends SparkSpecBase {
         col("text"))).as("fp_hash"))
       .distinct()
     val words = StreamingBloomGate.denseWords(
-      StreamingWinnowGate.fingerprintBloom(baseFp))
+      DedupOps.bloomFilter(baseFp, col("fp_hash")))
     assert(words.length == 2048 && words.exists(_ != 0L))
 
     val incoming = docs.filter(!basePred)
