@@ -15,6 +15,14 @@ import org.apache.spark.sql.SparkSession
   *  - the streaming state store: `cluster` sets RocksDB, `local` keeps the
   *    default HDFS-backed (in-memory) provider;
   *  - serializer: `cluster` sets Kryo, `local` keeps Java serialization;
+  *  - file listing: `local` always lists in the driver. Past
+  *    `parallelPartitionDiscovery.threshold` (32 paths) Spark lists through
+  *    a Spark job, which under `local[n]` runs in the same JVM on the same
+  *    cores and adds only job scheduling: 236–461 ms per listing in a
+  *    traced 4-core `stedi_p3` micro-batch over a 33+-directory glob,
+  *    against microseconds per directory for a local `listStatus`.
+  *    `cluster` keeps the job, which spreads object-store listing across
+  *    executors;
   *  - `cluster` registers [[GraftExtensions]] and leaves the master and UI to
   *    the launcher; `local` sets `local[n]` and turns the UI off.
   * Both use AQE and a UTC session time zone, and both pass through
@@ -37,6 +45,7 @@ object ClusterConfigs {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
 
   /** 100 TB profile. Sizing rationale, per setting:

@@ -636,9 +636,12 @@ object DedupQueries {
       import org.apache.spark.sql.expressions.Window
       val ds = docs(s, d)
       val cand = servedCandidates(s, d).select(col("doc_a"), col("doc_b"))
-      val posSh = ds.select(col("doc_id"),
-          posexplode(shingles(tokens(col("text")), col("text")))
-            .as(Seq("pos0", "sh")))
+      // tokens materialize in their own projection (as in
+      // explodedShingles): passed inline, split(trim(text)) would rerun
+      // inside the shingle lambda once per element
+      val posSh = ds.select(col("doc_id"), tokens(col("text")).as("toks"), col("text"))
+        .select(col("doc_id"),
+          posexplode(shingles(col("toks"), col("text"))).as(Seq("pos0", "sh")))
         .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("sh"))
       val m = cand
         .join(posSh.select(col("doc_id").as("doc_a"), col("pos").as("pa"),

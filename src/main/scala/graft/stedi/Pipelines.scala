@@ -15,9 +15,8 @@ import org.apache.spark.sql.Row
   *    queries are started and awaited together (`awaitAnyTermination`).
   *  - A hardened P3 variant adds watermarks so join state is bounded
   *    (the reference's join state grows forever, `sparkpykafkajoin.py:196`).
-  *  - For the 100 TB goal, enable the RocksDB state store
-  *    (`spark.sql.streaming.stateStore.providerClass` →
-  *    `RocksDBStateStoreProvider`) so join/agg state spills off-heap.
+  *  - The 100 TB deployment ([[graft.ClusterConfigs.cluster]]) runs these
+  *    on the RocksDB state store, so join/agg state lives off-heap.
   */
 object Pipelines {
 

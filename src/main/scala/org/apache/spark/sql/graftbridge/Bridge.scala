@@ -46,6 +46,16 @@ object Bridge {
         strategy +: classic.experimental.extraStrategies
   }
 
+  /** The function builder of a typed UDAF (`functions.udaf(aggregator)`)
+    * under `name`, as `spark.udf.register` builds it; unlike that call it
+    * needs no session, so the extensions path can inject it too. */
+  def aggregator(name: String, udf: org.apache.spark.sql.expressions.UserDefinedFunction)
+      : Seq[Expression] => Expression = {
+    val named = udf.withName(name)
+      .asInstanceOf[org.apache.spark.sql.expressions.UserDefinedAggregator[_, _, _]]
+    children => org.apache.spark.sql.execution.aggregate.ScalaAggregator(named, children)
+  }
+
   /** Runtime function registration on a live session (the extensions path
     * only applies at session build time). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

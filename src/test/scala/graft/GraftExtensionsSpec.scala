@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SQL surface of the native vector kernels. Test suites share one
-  * session per JVM, so `.withExtensions` (install-time) can't be exercised
-  * here — `GraftExtensions.install` performs the same registrations on the
-  * live session. */
+/** The SQL surface of the native kernels and aggregators. Test suites
+  * share one session per JVM; it registers through
+  * `GraftExtensions.install`, and the last test builds a second session on
+  * the same context through the extension path (`GraftExtensions.apply`,
+  * what `spark.sql.extensions` runs in the `cluster` profile). */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -61,5 +62,34 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(math.abs(qs(0) - 500) <= 20, s"p50 ${qs(0)}")
     assert(math.abs(qs(1) - 900) <= 20, s"p90 ${qs(1)}")
     assert(math.abs(qs(2) - 990) <= 20, s"p99 ${qs(2)}")
+  }
+
+  test("a session built through the extension path resolves every engine function") {
+    val names = Seq("dot_product", "vec_norm2", "cosine_sim", "token_hashes",
+      "simhash_32", "qsketch_quantiles", "qsketch_quantiles_at", "freq_items")
+    assert(GraftExtensions.functions.map(_._1).sorted == names.sorted)
+    val scalars =
+      """SELECT dot_product(array(1d, 2d), array(3d, 4d)) AS d,
+        |       vec_norm2(array(3d, 4d)) AS n,
+        |       cosine_sim(array(1d, 0d), array(1d, 1d)) AS c,
+        |       simhash_32(token_hashes(array('the', 'quick', 'fox'))) AS sh""".stripMargin
+    val aggregates =
+      """SELECT qsketch_quantiles(CAST(id AS DOUBLE)) AS q,
+        |       qsketch_quantiles_at(CAST(id AS DOUBLE), array(0.25D, 0.75D)) AS qa,
+        |       freq_items(CAST(id % 7 AS STRING)) AS f
+        |FROM range(1, 501)""".stripMargin
+    // create() makes the new session the default and active one; give the
+    // suite's shared session those roles back before anything else runs
+    val (priorDefault, priorActive) = (spark, SparkSession.getActiveSession)
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).create()
+    finally {
+      SparkSession.setDefaultSession(priorDefault)
+      priorActive.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
+    names.foreach(n => assert(ext.catalog.functionExists(n), s"$n does not resolve"))
+    // the same answers as the install path on the shared session
+    Seq(scalars, aggregates).foreach { q =>
+      assert(ext.sql(q).collect().toSeq == spark.sql(q).collect().toSeq, q)
+    }
   }
 }

@@ -386,9 +386,11 @@ class PlanGuardSpec extends SparkSpecBase {
     // computes the same value on every call: the per-row winnowing form
     // this replaced inlined its k-gram key array (one md5 per k-gram)
     // into the per-window lambda, so md5 re-ran for every window — 87 s
-    // against 2.6 s over 500 docs. Checked on the winnowing consumers
-    // (the curation gate battery, d43, the DedupIndex fingerprint build)
-    // and every frame they stage.
+    // against 2.6 s over 500 docs; d22 inlined split(trim(text)) into its
+    // shingle lambda the same way. Checked on the winnowing consumers
+    // (the curation gate battery, d43, the DedupIndex fingerprint build),
+    // d22's positional shingles, and every frame they stage. Each site
+    // names the expression that shows the walk reached its kernel.
     import org.apache.spark.sql.catalyst.expressions._
     def heavy(e: Expression): Boolean = e match {
       case _: Md5 | _: StringSplit | _: RLike | _: RegExpReplace |
@@ -407,21 +409,24 @@ class PlanGuardSpec extends SparkSpecBase {
     val basePred = col("doc_id") % 50 === 0
     val docs = Tables.documents(spark, sfDir).filter(!basePred)
     val cfg = streaming.StreamingCurationChain.config(spark, sfDir, basePred)
+    val winnow = classOf[graft.functions.WinnowKernel.WinnowKeys]
     val sites = Seq(
-      "curation gate frame" -> (() => streaming.StreamingCurationChain
+      ("curation gate frame", winnow, () => streaming.StreamingCurationChain
         .gateFrame(cfg)(docs.select(col("doc_id"), col("lang"), col("text")))),
-      "d43_winnowing" -> (() => SparkEntry.queries("d43_winnowing")(spark, sfDir)),
-      "DedupOps.winnowFps" -> (() => ops.DedupOps.winnowFps(
-        ops.DedupOps.winnowTokens(docs), ops.DedupIndex.WinW)))
-    sites.foreach { case (name, build) =>
+      ("d43_winnowing", winnow,
+        () => SparkEntry.queries("d43_winnowing")(spark, sfDir)),
+      ("DedupOps.winnowFps", winnow, () => ops.DedupOps.winnowFps(
+        ops.DedupOps.winnowTokens(docs), ops.DedupIndex.WinW)),
+      ("d22_quote_runs", classOf[ArrayTransform],
+        () => SparkEntry.queries("d22_quote_runs")(spark, sfDir)))
+    sites.foreach { case (name, kernel, build) =>
       val plans = optimizedPlans(build())
       val exprs = plans.flatMap(_.collect { case n => n.expressions }.flatten)
       val found = exprs.flatMap(invariant(_, Set.empty))
       assert(found.isEmpty, s"$name re-runs loop-invariant work per " +
         s"lambda element:\n${found.map(_.sql.take(300)).mkString("\n")}")
-      assert(exprs.exists(_.exists(_.isInstanceOf[
-          graft.functions.WinnowKernel.WinnowKeys])),
-        s"$name: no winnow_keys call among ${plans.size} plans")
+      assert(exprs.exists(_.exists(kernel.isInstance)),
+        s"$name: no ${kernel.getSimpleName} among ${plans.size} plans")
     }
   }
 }

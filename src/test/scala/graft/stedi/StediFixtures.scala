@@ -20,7 +20,9 @@ object StediFixtures {
     s"""{"customer":"$customer","score":$score,"riskDate":"2020-09-14T07:54:06.417Z"}"""
 
   /** P3's two inputs as text-file directories under `root`, released one
-    * batch at a time so a running file-source query sees each batch whole. */
+    * batch at a time so a running file-source query sees each batch whole.
+    * Each release is a subdirectory of its input and the sources glob
+    * those subdirectories, the layout of perfbench's `stedi_p3`. */
   final class P3Feed(root: JPath) {
     private val redisDir = Files.createDirectories(root.resolve("redis"))
     private val riskDir = Files.createDirectories(root.resolve("risk"))
@@ -39,16 +41,18 @@ object StediFixtures {
     }
 
     private def land(dir: JPath, b: Int, lines: Seq[String]): Unit = {
-      val tmp = Files.write(root.resolve(s".b$b-${dir.getFileName}"),
-        lines.mkString("\n").getBytes("UTF-8"))
-      Files.move(tmp, dir.resolve(s"b$b.txt"), StandardCopyOption.ATOMIC_MOVE)
+      val staged = Files.createDirectories(root.resolve(s".b$b-${dir.getFileName}"))
+      Files.write(staged.resolve("part.txt"), lines.mkString("\n").getBytes("UTF-8"))
+      Files.move(staged, dir.resolve(s"b$b"), StandardCopyOption.ATOMIC_MOVE)
     }
 
+    private def input(dir: JPath): String = s"$dir/*"
+
     def stream(spark: SparkSession): DataFrame = Pipelines.p3JoinToJson(
-      spark.readStream.text(riskDir.toString), spark.readStream.text(redisDir.toString))
+      spark.readStream.text(input(riskDir)), spark.readStream.text(input(redisDir)))
 
     /** Batch P3 over every file released so far. */
     def batch(spark: SparkSession): DataFrame = Pipelines.p3JoinToJson(
-      spark.read.text(riskDir.toString), spark.read.text(redisDir.toString))
+      spark.read.text(input(riskDir)), spark.read.text(input(redisDir)))
   }
 }

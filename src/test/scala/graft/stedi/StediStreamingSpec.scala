@@ -368,4 +368,47 @@ class StediStreamingSpec extends SparkSpecBase {
     assert(output("whole") == expected, "uninterrupted stream must equal batch P3")
     assert(output("cut") == expected, "restarted stream: no duplicates, no losses")
   }
+
+  test("P3 over 33+ release directories lists its files in the driver, not as a Spark job") {
+    // Past spark.sql.sources.parallelPartitionDiscovery.threshold (32 by
+    // default) paths, a file index lists through a Spark job; under
+    // local[n] that job only adds scheduling to every micro-batch, so the
+    // local profile lists in the driver whatever the glob matches.
+    val root = Files.createTempDirectory("p3-listing")
+    val feed = new P3Feed(root)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val marker = "p3-listing-marker"
+    spark.sparkContext.addSparkListener(listener)
+    val (got, expected) = try {
+      (0 until 33).foreach(feed.release)
+      val q = Pipelines.memorySink(feed.stream(spark), "p3_listing_out").start()
+      try {
+        q.processAllAvailable()
+        feed.release(33)
+        q.processAllAvailable()
+      } finally q.stop()
+      val out = (spark.table("p3_listing_out").as[String].collect().sorted.toSeq,
+        feed.batch(spark).as[String].collect().sorted.toSeq)
+      // the listener bus delivers in order: once the marker job has arrived,
+      // so has every job before it
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    assert(jobs.contains(marker), "listener bus did not deliver the marker job")
+    val listing = jobs.toArray(Array.empty[String])
+      .filter(_.startsWith("Listing leaf files and directories"))
+    assert(listing.isEmpty, s"listing jobs fired:\n${listing.mkString("\n")}")
+    assert(expected.size == 7 * 34 - 4,
+      "34 batches: 102 same-batch, 99 previous-batch and 33 next-batch matches")
+    assert(got == expected, "stream output must equal batch P3")
+  }
 }
