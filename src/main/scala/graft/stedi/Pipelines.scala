@@ -13,6 +13,13 @@ import org.apache.spark.sql.Row
   *  - P3's console query in the reference is dead code after a blocking
   *    `awaitTermination()` (`sparkpykafkajoin.py:218-221`); here multiple
   *    queries are started and awaited together (`awaitAnyTermination`).
+  *  - Streaming P3 is not Spark's stream-stream join (the reference's
+  *    `sparkpykafkajoin.py:196`) but one `flatMapGroupsWithState` keyed by
+  *    email ([[Transforms.joinRiskWithCustomerKeyed]]) with the join's rows
+  *    and columns in the same micro-batch; batch P3 stays the plain join.
+  *    A checkpoint written by the join-based P3 does not resume on it, and
+  *    under RocksDB each touched key's history is rewritten as one value,
+  *    where the join appends one row per event.
   *  - A hardened P3 variant adds watermarks so join state is bounded
   *    (the reference's join state grows forever, `sparkpykafkajoin.py:196`).
   *  - The 100 TB deployment ([[graft.ClusterConfigs.cluster]]) runs these
@@ -47,11 +54,16 @@ object Pipelines {
     Transforms.parseRiskEvent(raw)
 
   /** P3: join risk events with decoded customers → JSON `value`
-    * (`sparkpykafkajoin.py:196-212`). Parity mode: unwatermarked. */
+    * (`sparkpykafkajoin.py:196-212`). Parity mode: unwatermarked. When both
+    * inputs are streams the join is [[Transforms.joinRiskWithCustomerKeyed]],
+    * one keyed state operator; otherwise it is the plain
+    * [[Transforms.joinRiskWithCustomer]]. */
   def p3JoinToJson(riskRaw: DataFrame, redisRaw: DataFrame): DataFrame = {
     val risk = p2RiskEvents(riskRaw)
     val cust = p1CustomerDecode(redisRaw)
-    Transforms.toJsonValue(Transforms.joinRiskWithCustomer(risk, cust))
+    Transforms.toJsonValue(
+      if (risk.isStreaming && cust.isStreaming) Transforms.joinRiskWithCustomerKeyed(risk, cust)
+      else Transforms.joinRiskWithCustomer(risk, cust))
   }
 
   /** Kafka sink with the reference's options (`sparkpykafkajoin.py:212-218`):

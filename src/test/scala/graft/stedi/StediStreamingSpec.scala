@@ -175,15 +175,27 @@ class StediStreamingSpec extends SparkSpecBase {
       custW.addData(("final@test.com", "1950", ts(20, 0)))
       qW.processAllAvailable()
       val wmState = stateRows(qW)
-      val parityState = stateRows(qP)
-      // parity keeps every row ever seen on both sides (12 total);
       // the watermarked join holds only rows inside the 10-minute window
-      assert(parityState >= 12,
-        s"unwatermarked join must retain all state: $parityState")
-      assert(wmState < parityState,
-        s"watermark must bound state below the parity join: $wmState vs $parityState")
       assert(wmState <= 4,
         s"only the newest event pair can be inside the watermark window: $wmState")
+      // parity keeps every event ever seen on both sides: 12 events in one
+      // state row per key, and every one of them must still match
+      assert(stateRows(qP) == 6, s"one parity state row per key: ${stateRows(qP)}")
+      def parityRows = spark.table("state_parity").select(
+        get_json_object(col("value"), "$.email"), get_json_object(col("value"), "$.birthYear"))
+        .as[(String, String)].collect().toSeq
+      val seen0 = parityRows
+      custP.addData((0 until 6).map(i => envelope(customerJson("U", s"u$i@test.com", "1951-01-01"))))
+      qP.processAllAvailable()
+      val seen1 = parityRows
+      assert(seen1.diff(seen0).sorted == (0 until 6).map(i => (s"u$i@test.com", "1951")),
+        "each key's retained risk event must match its new customer version")
+      riskP.addData((0 until 6).map(i => riskJson(s"u$i@test.com", 2.0)))
+      qP.processAllAvailable()
+      assert(parityRows.diff(seen1).sorted ==
+        (0 until 6).flatMap(i => Seq((s"u$i@test.com", "1950"), (s"u$i@test.com", "1951"))),
+        "each key's new risk event must match both retained customer versions")
+      assert(stateRows(qP) == 6, s"still one parity state row per key: ${stateRows(qP)}")
     } finally { qW.stop(); qP.stop() }
   }
 
