@@ -17,9 +17,11 @@ import org.apache.spark.sql.Row
   *    `sparkpykafkajoin.py:196`) but one `flatMapGroupsWithState` keyed by
   *    email ([[Transforms.joinRiskWithCustomerKeyed]]) with the join's rows
   *    and columns in the same micro-batch; batch P3 stays the plain join.
-  *    A checkpoint written by the join-based P3 does not resume on it, and
-  *    under RocksDB each touched key's history is rewritten as one value,
-  *    where the join appends one row per event.
+  *    A checkpoint written by the join-based P3 does not resume on it, nor
+  *    does one written before its state was packed into two byte arrays
+  *    ([[Transforms.ParityState]]); and under RocksDB each touched key's
+  *    history is rewritten as one value, where the join appends one row per
+  *    event.
   *  - A hardened P3 variant adds watermarks so join state is bounded
   *    (the reference's join state grows forever, `sparkpykafkajoin.py:196`).
   *  - The 100 TB deployment ([[graft.ClusterConfigs.cluster]]) runs these

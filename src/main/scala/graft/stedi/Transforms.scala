@@ -1,5 +1,8 @@
 package graft.stedi
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.stedi.Schemas.RiskWithBirthYear
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -93,8 +96,14 @@ object Transforms {
   final case class ParityEvent(email: String, score: java.lang.Float,
                                birthYear: String, isRisk: Boolean)
 
-  /** Every risk score and every birthYear seen so far under one email. */
-  final case class ParityState(scores: Seq[java.lang.Float], birthYears: Seq[String])
+  /** Every risk score and every birthYear seen so far under one email,
+    * packed in arrival order: a score is a null flag and its float bits (5
+    * bytes), a birthYear its UTF-8 byte length (-1 for null) and bytes. Two
+    * binary fields keep the state's encoders free of `MapObjects`, whose
+    * generated source differs each time the encoder is resolved: a
+    * collection-typed state made every micro-batch compile its state
+    * deserializer anew, with the other state tasks waiting on the compile. */
+  final case class ParityState(scores: Array[Byte], birthYears: Array[Byte])
 
   /** [[joinRiskWithCustomer]] for two streams, as one keyed state operator:
     * a `flatMapGroupsWithState` keyed by email over the union of both
@@ -102,8 +111,12 @@ object Transforms {
     * version of their key, plus the key's earlier risk events × its new
     * customer versions: the stream-stream join's rows, with its columns
     * `(customer, score, email, birthYear)`, in the same micro-batch. Null
-    * keys are dropped, as `=` drops them. State is one row per key, and it
-    * grows without bound like the join's (the reference's parity mode).
+    * keys are dropped, as `=` drops them, inside the operator: a filter
+    * ahead of it would be pushed below the risk parse and parse each line
+    * twice. State is one row per key, and it grows without bound like the
+    * join's (the reference's parity mode); a batch appends its events' bytes
+    * to it, and decodes the key's earlier scores only when it brings new
+    * customer versions, its earlier birthYears only when it brings new risks.
     *
     * Why not Spark's join: each copy of `StreamingSymmetricHashJoinExec`
     * serializes and broadcasts the session's Hadoop conf, and every
@@ -112,15 +125,16 @@ object Transforms {
     * micro-batch that came to 27 broadcasts, against 4 with this operator.
     *
     * Divergences from the join: a checkpoint written by the join-based P3
-    * does not resume here (different state operator and schema); and under
-    * RocksDB a touched key's whole history is rewritten as one value, where
-    * the join appends one row per event. */
+    * does not resume here (different state operator and schema), nor does
+    * one written before the state was packed ([[ParityState]] held two
+    * lists then); and under RocksDB a touched key's whole history is
+    * rewritten as one value, where the join appends one row per event. */
   def joinRiskWithCustomerKeyed(risk: DataFrame, customer: DataFrame): DataFrame = {
     val spark = risk.sparkSession
     import spark.implicits._
-    val r = risk.where(col("customer").isNotNull).select(col("customer").as("email"),
+    val r = risk.select(col("customer").as("email"),
       col("score"), lit(null).cast("string").as("birthYear"), lit(true).as("isRisk"))
-    val c = customer.where(col("email").isNotNull).select(col("email"),
+    val c = customer.select(col("email"),
       lit(null).cast("float").as("score"), col("birthYear"), lit(false).as("isRisk"))
     r.unionByName(c).groupBy("email").as[String, ParityEvent]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(parityStep)
@@ -128,16 +142,53 @@ object Transforms {
   }
 
   private def parityStep(email: String, events: Iterator[ParityEvent],
-      state: GroupState[ParityState]): Iterator[RiskWithBirthYear] = {
-    val old = state.getOption.getOrElse(ParityState(Nil, Nil))
-    val (risks, custs) = events.toVector.partition(_.isRisk)
-    val scores = risks.map(_.score)
-    val years = custs.map(_.birthYear)
-    val allYears = old.birthYears ++ years
-    state.update(ParityState(old.scores ++ scores, allYears))
-    def rows(ss: Seq[java.lang.Float], ys: Seq[String]) =
-      ss.iterator.flatMap(s => ys.iterator.map(y => RiskWithBirthYear(email, s, email, y)))
-    rows(scores, allYears) ++ rows(old.scores, years)
+      state: GroupState[ParityState]): Iterator[RiskWithBirthYear] =
+    if (email == null) Iterator.empty
+    else {
+      val (risks, custs) = events.toVector.partition(_.isRisk)
+      val scores = risks.map(_.score)
+      val years = custs.map(_.birthYear)
+      val old = state.getOption.getOrElse(ParityState(Array.emptyByteArray, Array.emptyByteArray))
+      val oldScores = if (years.isEmpty) Vector.empty else unpackScores(old.scores)
+      val oldYears = if (scores.isEmpty) Vector.empty else unpackYears(old.birthYears)
+      state.update(ParityState(old.scores ++ packScores(scores),
+        old.birthYears ++ packYears(years)))
+      def rows(ss: Seq[java.lang.Float], ys: Seq[String]) =
+        ss.iterator.flatMap(s => ys.iterator.map(y => RiskWithBirthYear(email, s, email, y)))
+      rows(scores, oldYears ++ years) ++ rows(oldScores, years)
+    }
+
+  private def packScores(ss: Seq[java.lang.Float]): Array[Byte] = {
+    val b = ByteBuffer.allocate(5 * ss.size)
+    ss.foreach(s => if (s == null) b.put(0: Byte).putFloat(0f) else b.put(1: Byte).putFloat(s))
+    b.array
+  }
+
+  private def unpackScores(a: Array[Byte]): Vector[java.lang.Float] = {
+    val b = ByteBuffer.wrap(a)
+    Vector.fill(a.length / 5) {
+      val present = b.get() != 0
+      val s = b.getFloat
+      if (present) java.lang.Float.valueOf(s) else null
+    }
+  }
+
+  private def packYears(ys: Seq[String]): Array[Byte] = {
+    val utf8 = ys.map(y => if (y == null) null else y.getBytes(UTF_8))
+    val b = ByteBuffer.allocate(utf8.map(u => 4 + (if (u == null) 0 else u.length)).sum)
+    utf8.foreach(u => if (u == null) b.putInt(-1) else b.putInt(u.length).put(u))
+    b.array
+  }
+
+  private def unpackYears(a: Array[Byte]): Vector[String] = {
+    val b = ByteBuffer.wrap(a)
+    val out = Vector.newBuilder[String]
+    while (b.hasRemaining) {
+      val n = b.getInt
+      out += (if (n < 0) null else new String(a, b.position(), n, UTF_8))
+      b.position(b.position() + math.max(n, 0))
+    }
+    out.result()
   }
 
   /** Hardened variant: watermarks bound join state. Documented divergence
