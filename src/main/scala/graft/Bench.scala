@@ -143,48 +143,18 @@ object Bench {
       s.split(" ").take(3).mkString(" ")
     } catch { case _: Throwable => "?" }
 
-  /** Per-query seconds from the newest committed BENCH_FULL_r*.json in the
-    * working directory (empty when none parses) — the prior a fresh timing
-    * is compared against to detect a load-contaminated measurement. */
-  private def priorTimes(): Map[String, Double] =
-    try {
-      val dir = java.nio.file.Paths.get(".")
-      val re = "BENCH_FULL_r(\\d+)\\.json".r
-      val files = java.nio.file.Files.list(dir).iterator()
-      var best: Option[(Int, java.nio.file.Path)] = None
-      while (files.hasNext) {
-        val p = files.next()
-        p.getFileName.toString match {
-          case re(n) if best.forall(_._1 < n.toInt) => best = Some((n.toInt, p))
-          case _ => ()
-        }
-      }
-      best.map { case (_, p) =>
-        val txt = new String(java.nio.file.Files.readAllBytes(p))
-        // real JSON parse (Jackson rides Spark's classpath) — the earlier
-        // indexOf('}')-substring parse was exact for the current flat
-        // writer but would silently yield an empty prior map (and
-        // disable the over-prior rerun adjudication, with no signal) on
-        // any format growth. The rerun TRIGGER RULE itself (2x prior
-        // +0.5s floor, instability >2x, <=30 reruns, best kept) is
-        // deliberately unchanged so rounds stay comparable.
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val node = om.readTree(txt).get("queries")
-        val m = scala.collection.mutable.Map[String, Double]()
-        if (node != null && node.isObject) {
-          val it = node.fields()
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getValue.isNumber) m(e.getKey) = e.getValue.asDouble()
-          }
-        }
-        if (m.isEmpty)
-          System.err.println(
-            s"Bench.priorTimes: $p exists but yielded no prior query map" +
-              " — over-prior rerun adjudication is OFF this run")
-        m.toMap
-      }.getOrElse(Map.empty)
-    } catch { case _: Throwable => Map.empty }
+  /** Load-spike adjudication: which first-pass queries get ONE more run.
+    * A query is unstable when its own two runs differ by more than 2× (a
+    * co-tenant spike during one of them); only those are rerun, at the end
+    * of the bench after the load window has had time to pass, and keep
+    * their best. Capped at 30 to bound the added wall-clock, most-inflated
+    * (largest max/min) first. Returns each pick with its pre-rerun best
+    * seconds — the "reran" map. */
+  def reruns(firstPass: Seq[(String, Seq[Double])]): Seq[(String, Double)] =
+    firstPass.collect {
+      case (name, times) if times.size == 2 && times.max > 2 * times.min =>
+        (name, times.min, times.max / times.min)
+    }.sortBy(-_._3).take(30).map { case (name, best, _) => (name, best) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -192,7 +162,6 @@ object Bench {
       SparkSession.builder().appName("graft-bench"), ClusterConfigs.localCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadBefore = loadavg()
-    val prior = priorTimes()
     val qs = SparkEntry.queries
     // Warm EVERY headline query once at the smallest SF: Janino compilation
     // of a complex plan costs 0.5-3s and the generated-code cache is keyed
@@ -200,56 +169,23 @@ object Bench {
     // PLAN, not the compiler. (Warmup failures are ignored here — the timed
     // section reports real errors.)
     val warmDir = "/root/testdata/sf0.001"
-    headline.filter(qs.contains).foreach { name =>
-      try { qs(name)(spark, warmDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-    }
+    headline.filter(qs.contains).foreach(name => Measure.run(qs(name)(spark, warmDir)))
     // Best-of-2 per query: single-run timings on a shared host are ±30-100%
     // noisy (page cache, codegen compilation, CPU contention); the min of two
     // runs is a far stabler estimate of the plan's actual cost. A failed run
     // contributes NO timing — a query whose both runs fail lands in "errors"
     // instead of masquerading as a fast success.
-    def timeOnce(name: String): (Option[Double], Option[String]) = {
-      val t0 = System.nanoTime()
-      try {
-        qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (Some((System.nanoTime() - t0) / 1e9), None)
-      } catch {
-        case e: Throwable =>
-          (None, Some((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
-            .replaceAll("[\"\\\\\n\r\t]", " ").take(160)))
-      }
-    }
+    def timeOnce(name: String): Either[String, Double] =
+      Measure.run(qs(name)(spark, sfDir)).map(_.seconds)
     val firstPass = headline.filter(qs.contains).map { name =>
-      var err: Option[String] = None
-      val times = (1 to 2).flatMap { _ =>
-        val (t, e) = timeOnce(name)
-        e.foreach(m => err = Some(m))
-        t
-      }
-      (name, times, err)
+      val runs = Seq.fill(2)(timeOnce(name))
+      (name, runs.collect { case Right(t) => t }, runs.collect { case Left(e) => e }.lastOption)
     }
-    // Load-spike adjudication (the three-rounds-running BENCH_r* problem:
-    // the committed artifact carries phantom 3-11x spikes from co-tenant
-    // host load, and a judge then has to re-measure by hand). A query is
-    // SUSPECT when its best-of-2 still reads > 2x its committed
-    // BENCH_FULL_r* prior, or when its own two runs disagree by > 2x (a
-    // spike during one run). Suspects get ONE more run at the end of the
-    // bench — after the load window has had time to pass — and keep the
-    // best; the artifact lists them under "reran" with the pre-re-run
-    // seconds so the adjudication is visible, not silent. Capped at 30
-    // re-runs, most-inflated first, to bound added wall-clock.
-    val rerun = firstPass.collect {
-      case (name, times, _) if times.nonEmpty && {
-        val best = times.min
-        val unstable = times.size == 2 && times.max > 2 * best
-        val overPrior = prior.get(name).exists(p => best > 2 * p && best - p > 0.5)
-        unstable || overPrior
-      } => (name, times.min)
-    }.sortBy(-_._2).take(30)
+    // the artifact lists the rerun queries under "reran" with their
+    // pre-rerun seconds, so the adjudication is visible, not silent
+    val rerun = reruns(firstPass.map { case (name, times, _) => (name, times) })
     val rerunBest = rerun.map { case (name, firstBest) =>
-      val (t, _) = timeOnce(name)
-      (name, math.min(firstBest, t.getOrElse(firstBest)))
+      (name, math.min(firstBest, timeOnce(name).getOrElse(firstBest)))
     }.toMap
     val results = firstPass.map { case (name, times, err) =>
       val best = times.minOption.map(b =>
@@ -272,7 +208,8 @@ object Bench {
       .sortBy(_._2)
       .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    val errors = results.collect { case (k, None, Some(m)) => "\"" + k + "\":\"" + m + "\"" }
+    val errors = results.collect { case (k, None, Some(m)) =>
+      Measure.jsonString(k) + ":" + Measure.jsonString(m.take(160)) }
     val errJson = if (errors.isEmpty) "" else errors.mkString(""","errors":{""", ",", "}")
     val total = results.flatMap(_._2).sum
     // The driver stores a truncated window of this output, and the ~100-entry

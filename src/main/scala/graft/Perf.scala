@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Perf probe: `runMain graft.Perf <sfDir> <query> [query...]` — times each
-  * named query twice (cold/warm; each run builds its frame and writes it to
-  * a noop sink), dumps a per-stage task-duration skew table for the warm
-  * run (tasks, median/max ms, skew = max/median — a straggler shows up as
-  * skew >> 1 on a stage with many tasks, the thing wall-clock alone can't
-  * distinguish from uniform slowness), then prints the warm run's formatted
-  * physical plan. */
+  * named query twice (cold/warm; each run is one [[Measure.run]]), dumps
+  * a per-stage task-duration skew table for the warm run (tasks,
+  * median/max ms, skew = max/median — a straggler shows up as skew >> 1 on
+  * a stage with many tasks, the thing wall-clock alone can't distinguish
+  * from uniform slowness), then prints the warm run's formatted physical
+  * plan. */
 object Perf {
 
   /** Collects (stageId, task duration ms) while attached; stage callsites
@@ -33,7 +33,8 @@ object Perf {
         names(e.stageInfo.stageId) =
           e.stageInfo.name.takeWhile(_ != '(').trim + " @ " +
             e.stageInfo.details.linesIterator
-              .find(l => l.contains("graft") && !l.contains("Perf"))
+              .find(l => l.contains("graft") && !l.contains("Perf") &&
+                !l.contains("Measure"))
               .getOrElse("").trim.stripPrefix("at ").take(80)
       }
     def report(): String = synchronized {
@@ -58,25 +59,24 @@ object Perf {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       println(s"==== $name ====")
-      // run1 times the first call: building a query's frame can already run
-      // eager work (persisted-index builds, staged frames), so the plan is
-      // printed only after the timed runs
-      val frames = (1 to 2).map { i =>
+      // each run is one Measure.run, so run1 includes eager build work
+      // (persisted-index builds, staged frames); the plan is printed only
+      // after the timed runs
+      val runs = (1 to 2).map { i =>
         val listener = if (i == 2) Some(new TaskDurations) else None
         listener.foreach(spark.sparkContext.addSparkListener)
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[$name run$i] ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        val run = Measure.run(fn(spark, sfDir))
+        println(run.fold(e => s"[$name run$i] failed: $e",
+          r => f"[$name run$i] ${r.seconds}%.3f s"))
         listener.foreach { l =>
           Thread.sleep(500) // listener bus drain (no public flush API)
           println(s"[$name task skew]\n${l.report()}")
           spark.sparkContext.removeSparkListener(l)
         }
-        df
+        run
       }
-      println(frames.last.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      runs.last.foreach(r => println(r.frame.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
     }
     spark.stop()
   }

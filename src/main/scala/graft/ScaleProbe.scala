@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe (non-oracle): generates a matched PAIR of
@@ -26,16 +26,18 @@ import org.apache.spark.sql.functions._
   *
   * Everything is md5-deterministic (no RNG): the same run always
   * produces the same corpora, so probe numbers are comparable across
-  * rounds. Output: one JSON line (queries × {t1x, t10x, ratio}) plus
-  * the corpus cardinalities.
+  * rounds. Output: one JSON line (queries × {t1x, t10x, ratio}, plus the
+  * `g100x` decade's queries100x unless `skip100x`) with the corpus
+  * cardinalities. Every timed run is one [[Measure.run]].
   *
-  * Usage: sbt "runMain graft.ScaleProbe"     (or tools/run_scale_probe.sh)
+  * Usage: sbt "runMain graft.ScaleProbe [skip100x]"
+  *        (or tools/run_scale_probe.sh)
+  *        sbt "runMain graft.ScaleProbe diag <10|100> <query> [reps] [warm10x]"
   */
 object ScaleProbe {
 
-  val G1xDir = "target/scaleprobe/g1x"
-  val G10xDir = "target/scaleprobe/g10x"
-  val G100xDir = "target/scaleprobe/g100x"
+  /** Directory of the `scale`× corpus. */
+  def corpusDir(scale: Int): String = s"target/scaleprobe/g${scale}x"
 
   /** The heaviest headline families get a SECOND decade (t10x → t100x:
     * 500k docs / 200k vectors / 60M lineitem) — two decades of evidence
@@ -98,13 +100,15 @@ object ScaleProbe {
 
   private def h(c: Column): Column = graft.ops.TextOps.hash60(c)
 
-  /** Generate a corpus dir iff absent (keyed by _SUCCESS markers).
-    * `scale` multiplies docs/vectors/lineitem-replicas AND topics —
-    * docs-per-topic stays constant, keeping near-dup density linear. */
-  def ensureCorpus(s: SparkSession, dir: String, scale: Int): Unit = {
+  /** Generate the `scale`× corpus iff absent (keyed by _SUCCESS markers)
+    * and return its directory. `scale` multiplies docs/vectors/lineitem-
+    * replicas AND topics — docs-per-topic stays constant, keeping near-dup
+    * density linear. */
+  def ensureCorpus(s: SparkSession, scale: Int): String = {
+    val dir = corpusDir(scale)
     if (graft.ops.PersistedIndex.complete(s, Seq("documents.parquet",
         "embeddings.parquet", "lineitem.parquet").map(t => s"$dir/$t")))
-      return
+      return dir
 
     // --- documents: disjoint-topic token sampling -----------------------
     // vocab = the corpus's empirical 31 tokens (sorted by frequency).
@@ -169,10 +173,39 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
     rep.repartition(8 * scale).write.mode("overwrite")
       .parquet(s"$dir/lineitem.parquet")
+    dir
   }
 
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+  /** Runs `body` under the decade's sizing and restores the four confs
+    * after. Every knob scales the per-task working set back to what the
+    * operators were designed for at the 100× corpus — exactly what a
+    * production cluster does by running more tasks:
+    *  - 256 shuffle partitions: the engine's 32 put ~2M exploded gram rows
+    *    in each task's aggregation map and 32 concurrent maps exceed the
+    *    executor pool (observed as AGGREGATE_OUT_OF_MEMORY in the Gopher
+    *    leg); AQE coalesces the small ones back.
+    *  - 1 MB scan bins, open cost 128 KB so small files still pack: the
+    *    decade corpus is 90 MB on disk across 400 small files, so the
+    *    default 128 MB maxPartitionBytes bin-packs the scan into ~14 tasks
+    *    of ~36k docs whose 9-way gram melt exhausts the pool before the
+    *    spill sorter can allocate; 1 MB targets ~140 tasks of ~3.5k docs.
+    *  - DISK_ONLY stage frames: t52's gram-instance stage alone is ~250M
+    *    rows at 500k docs, and memory-and-disk staging occupies the
+    *    unified pool's evict-protected storage share; see [[Tables.stage]].
+    *  - 256-way fanout: `fanout()` repartitions to defaultParallelism (32)
+    *    at every query head, so scan-side sizing alone cannot shrink
+    *    anything downstream of it. The partition-override hook is the
+    *    production knob; results are partition-invariant
+    *    (OperatorPropertiesSpec pins exactly that). */
+  private def decadeConfig[T](spark: SparkSession)(body: => T): T = {
+    val confs = Seq("spark.sql.shuffle.partitions" -> "256",
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.files.openCostInBytes" -> "131072",
+      "spark.graft.stageLevel" -> "DISK_ONLY")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try Tables.withFanoutParts(256)(body)
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   def main(args: Array[String]): Unit = {
@@ -190,6 +223,7 @@ object ScaleProbe {
         // what a production block manager would be configured with.
         .config("spark.rdd.compress", "true"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val qs = SparkEntry.queries
     // Queries localCheckpoint intermediates that stay pinned until
     // unpersisted, and UnifiedMemoryManager protects in-use storage up
     // to storageFraction — at the 100× corpus one query's pinned
@@ -208,201 +242,94 @@ object ScaleProbe {
         .values.foreach(_.unpersist(blocking = true))
       System.gc()
     }
-    // Diagnostic mode: `runMain graft.ScaleProbe matched <query>` times
-    // one decade query at the 10× corpus UNDER THE DECADE'S EXACT CONFIG
-    // (DISK_ONLY staging, 256 shuffle partitions, 1 MB scan bins,
-    // 256-way fanout) — the matched-medium denominator that decomposes
-    // a t100x/t10x ratio into data-scale vs storage-medium components
-    // (the headline 10× readings stage through memory; the decade's
-    // DISK_ONLY frames pay write+read I/O the denominator never paid).
-    // Diagnostic mode: `runMain graft.ScaleProbe decade <query> [reps]`
-    // times ONE decade query at the 100× corpus under the decade's
-    // exact config, `reps` times (default 3, each rep unpersisted and
-    // GC'd) and prints every rep. The corpus is hash-deterministic, so
-    // partition layout and AQE decisions are identical across reps —
-    // the repeated-measurement harness that separates a query's real
-    // decade cost from host state (page cache, dirty-page writeback
-    // from the preceding query, CPU contention): stable reps = the
-    // spread across probe RUNS was inter-query interference, not the
-    // operator.
-    if (args.length >= 2 && args(0) == "decade") {
-      ensureCorpus(spark, G100xDir, 100)
-      spark.conf.set("spark.sql.shuffle.partitions", "256")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
-      spark.conf.set("spark.sql.files.openCostInBytes", "131072")
-      spark.conf.set("spark.graft.stageLevel", "DISK_ONLY")
-      val reps = if (args.length >= 3) args(2).toInt else 3
-      val q = SparkEntry.queries(args(1))
-      // optional 4th arg "warm10x": run the query once at the 10× corpus
-      // first (the full probe's execution order) — separates per-JVM
-      // warmup shared across scales (codegen/JIT of the same plan
-      // shapes) from genuinely scale-specific first-run cost.
-      if (args.length >= 4 && args(3) == "warm10x") {
-        ensureCorpus(spark, G10xDir, 10)
-        Tables.withFanoutParts(256) {
-          q(spark, G10xDir).write.format("noop").mode("overwrite").save()
+    // The probe's one timing loop: `n` timed runs of `name` over the
+    // `scale`× corpus, pinned frames dropped after each; stops at the
+    // first failure and yields its error text. The corpus is
+    // hash-deterministic, so partition layout and AQE decisions are
+    // identical across runs.
+    def reps(name: String, scale: Int, n: Int): Either[String, Seq[Double]] =
+      (1 to n).foldLeft[Either[String, Seq[Double]]](Right(Vector.empty)) { (acc, i) =>
+        acc.flatMap { ts =>
+          val run = Measure.run(qs(name)(spark, corpusDir(scale))).map(_.seconds)
+          dropPinned()
+          System.err.println(s"[scale-probe] $name @${scale}x run $i: " +
+            run.fold(e => s"FAILED: $e", t => f"$t%.2f s"))
+          run.map(ts :+ _)
         }
-        dropPinned()
-        System.err.println(s"[scale-probe] ${args(1)} warmed at 10x")
       }
-      val ts = (1 to reps).map { i =>
-        val t = Tables.withFanoutParts(256) {
-          time(q(spark, G100xDir)
-            .write.format("noop").mode("overwrite").save())
-        }
-        dropPinned()
-        System.err.println(f"[scale-probe] ${args(1)} @100x rep $i: $t%.2f s")
-        t
+    // Diagnostic mode: `runMain graft.ScaleProbe diag <10|100> <query>
+    // [reps] [warm10x]` times ONE query `reps` times (default 3) at the
+    // 10× or 100× corpus UNDER THE DECADE'S EXACT CONFIG and prints every
+    // rep.
+    //  - At 10× it is the matched-medium denominator that decomposes a
+    //    t100x/t10x ratio into data-scale vs storage-medium components
+    //    (the headline 10× readings stage through memory; the decade's
+    //    DISK_ONLY frames pay write+read I/O the denominator never paid).
+    //  - At 100× it separates a query's real decade cost from host state
+    //    (page cache, dirty-page writeback from the preceding query, CPU
+    //    contention): stable reps = the spread across probe RUNS was
+    //    inter-query interference, not the operator.
+    // `warm10x` first runs the query once at the 10× corpus (the full
+    // probe's execution order) — separates per-JVM warmup shared across
+    // scales (codegen/JIT of the same plan shapes) from genuinely
+    // scale-specific first-run cost.
+    if (args.length >= 3 && args(0) == "diag") {
+      val scale = args(1).stripSuffix("x").toInt
+      require(scale == 10 || scale == 100, s"diag corpus must be 10 or 100, got ${args(1)}")
+      val name = args(2)
+      val n = if (args.length >= 4) args(3).toInt else 3
+      ensureCorpus(spark, scale)
+      if (args.contains("warm10x")) ensureCorpus(spark, 10)
+      val ts = decadeConfig(spark) {
+        if (args.contains("warm10x")) reps(name, 10, 1)
+        reps(name, scale, n)
       }
-      println(s"""{"metric":"decade_reps","query":"${args(1)}",""" +
-        s""""reps":[${ts.map(t => f"$t%.2f").mkString(",")}],""" +
-        f""""min":${ts.min}%.2f,"max":${ts.max}%.2f}""")
+      val metric = if (scale == 10) "matched_medium" else "decade_reps"
+      val fields = ts.fold(e => s""""error":${Measure.jsonString(e)}""", t =>
+        s""""reps":[${t.map(x => f"$x%.2f").mkString(",")}],""" +
+          f""""min":${t.min}%.2f,"max":${t.max}%.2f""" +
+          (if (scale == 10) f""","t10x_decade_cfg":${t.min}%.2f""" else ""))
+      println(s"""{"metric":"$metric","query":"$name",$fields}""")
       spark.stop()
       return
     }
-    if (args.length >= 2 && args(0) == "matched") {
-      ensureCorpus(spark, G10xDir, 10)
-      spark.conf.set("spark.sql.shuffle.partitions", "256")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
-      spark.conf.set("spark.sql.files.openCostInBytes", "131072")
-      spark.conf.set("spark.graft.stageLevel", "DISK_ONLY")
-      val q = SparkEntry.queries(args(1))
-      val ts = (1 to 2).map { _ =>
-        val t = Tables.withFanoutParts(256) {
-          time(q(spark, G10xDir)
-            .write.format("noop").mode("overwrite").save())
-        }
-        dropPinned()
-        t
-      }
-      println(f"""{"metric":"matched_medium","query":"${args(1)}","t10x_decade_cfg":${ts.min}%.2f}""")
-      spark.stop()
-      return
-    }
-    ensureCorpus(spark, G1xDir, 1)
-    ensureCorpus(spark, G10xDir, 10)
-    val qs = SparkEntry.queries
+    val scales = if (args.contains("skip100x")) Seq(1, 10) else Seq(1, 10, 100)
+    scales.foreach(ensureCorpus(spark, _))
     // cardinality context so ratios are attributable
-    def card(d: String): (Long, Long, Long) = (
-      Tables.documents(spark, d).count(),
-      Tables.embeddings(spark, d).count(),
-      Tables.lineitem(spark, d).count())
-    val (d1, e1, l1) = card(G1xDir)
-    val (d10, e10, l10) = card(G10xDir)
+    val cards = scales.map { sc =>
+      Seq(Tables.documents _, Tables.embeddings _, Tables.lineitem _)
+        .map(_(spark, corpusDir(sc)).count())
+    }.transpose.map(_.mkString("[", ",", "]"))
+    // a probe query that refuses (e.g. a wedge-budget guard at the
+    // generated corpus) records its error and the sweep continues —
+    // one pathological query must not discard the other readings.
+    // The first 1x run doubles as codegen warmup.
     val rows = ProbeQueries.distinct.flatMap { n =>
-      def run(d: String): Double = {
-        val ts = (1 to 2).map { _ =>
-          val t = time(qs(n)(spark, d)
-            .write.format("noop").mode("overwrite").save())
-          dropPinned()
-          t
-        }
-        ts.min
-      }
-      // a probe query that refuses (e.g. a wedge-budget guard at the
-      // generated corpus) records its error and the sweep continues —
-      // one pathological query must not discard the other ~35 readings
-      try {
-        System.err.println(s"[scale-probe] $n @1x ...")
-        val a = run(G1xDir) // first 1x run doubles as codegen warmup
-        System.err.println(s"[scale-probe] $n @10x ...")
-        val b = run(G10xDir)
-        System.err.println(f"[scale-probe] $n: $a%.2f s → $b%.2f s")
-        Some((n, a, b, b / a))
-      } catch {
-        case e: Throwable =>
-          dropPinned()
-          System.err.println(s"[scale-probe] $n FAILED: ${e.getMessage}")
-          None
-      }
+      val r = for (a <- reps(n, 1, 2); b <- reps(n, 10, 2)) yield (n, a.min, b.min)
+      r.foreach { case (_, a, b) => System.err.println(f"[scale-probe] $n: $a%.2f s → $b%.2f s") }
+      r.toOption
     }
-    val qjson = rows.map { case (n, a, b, r) =>
-      f""""$n":{"t1x":$a%.2f,"t10x":$b%.2f,"ratio":$r%.2f}"""
+    val qjson = rows.map { case (n, a, b) =>
+      f""""$n":{"t1x":$a%.2f,"t10x":$b%.2f,"ratio":${b / a}%.2f}"""
     }.mkString(",")
     // second decade for the heaviest families (reuses each query's 10×
     // reading from the loop above as the denominator). `skip100x` keeps
     // a low-core-count probe run to the 1x/10x evidence the verdict
     // asked for without re-paying the ~15-min decade leg.
-    if (args.contains("skip100x")) {
-      println(s"""{"metric":"scale_probe","cpus":$cpus,""" +
-        s""""docs":[$d1,$d10],"embeddings":[$e1,$e10],""" +
-        s""""lineitem":[$l1,$l10],"queries":{$qjson}}""")
-      spark.stop()
-      return
-    }
-    dropPinned()
-    ensureCorpus(spark, G100xDir, 100)
-    // Shuffle partitions must scale with input — the engine's 32 is the
-    // sf0.1/1×/10× grain; at the 100× corpus 32 partitions put ~2M
-    // exploded gram rows in each task's aggregation map and 32
-    // concurrent maps exceed the executor pool (observed as
-    // AGGREGATE_OUT_OF_MEMORY in the Gopher leg). 256 restores the
-    // per-task working set the operators were designed for — exactly
-    // what a production cluster does by running more tasks; AQE
-    // coalesces the small ones back.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "256")
-    // Scan-side twin of the same sizing rule: the decade corpus is 90 MB
-    // ON DISK across 400 small files, so the default 128 MB
-    // maxPartitionBytes bin-packs the whole scan into ~14 tasks of ~36k
-    // docs whose 9-way gram melt builds ~6M-entry partial-agg maps —
-    // 32 concurrent tasks of those exhaust the pool before the spill
-    // sorter can even allocate (the brief's "size maxPartitionBytes so
-    // partitions fit" rule, hit in practice). 1 MB (with openCost cut to
-    // 128 KB so small files still pack) targets ~140 scan tasks of
-    // ~3.5k docs each.
-    val prevMaxPart = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
-    spark.conf.set("spark.sql.files.openCostInBytes", "131072")
-    // Stage frames go to DISK at the decade grain: t52's gram-instance
-    // stage alone is ~250M rows at 500k docs, and memory-and-disk
-    // staging occupies the unified pool's evict-protected storage share
-    // — the 32 concurrent partial-agg maps then can't get execution
-    // memory (observed: AGGREGATE_OUT_OF_MEMORY in the t52 gc agg even
-    // at 256 shuffle partitions). DISK_ONLY hands execution the whole
-    // pool; see [[Tables.stage]].
-    spark.conf.set("spark.graft.stageLevel", "DISK_ONLY")
-    val (d100, e100, l100) = card(G100xDir)
-    val t10 = rows.map { case (n, _, b, _) => n -> b }.toMap
-    val rows100 = DecadeQueries.map { n =>
-      // fanout() repartitions to defaultParallelism (32) at every
-      // query head, so scan-side sizing alone cannot shrink the
-      // per-task working set of anything downstream of it — at 500k
-      // docs a 32-way gram melt is ~16k docs (~2.5M partial-agg
-      // entries) per task and 32 concurrent maps exhaust the pool.
-      // The partition-override hook the invariance spec uses
-      // (withFanoutParts) IS the production knob: 256-way fanout puts
-      // ~2k docs in each task. Results are partition-invariant
-      // (OperatorPropertiesSpec pins exactly that).
-      def run(d: String): Double = {
-        val ts = (1 to 2).map { _ =>
-          val t = Tables.withFanoutParts(256) {
-            time(qs(n)(spark, d)
-              .write.format("noop").mode("overwrite").save())
-          }
-          dropPinned()
-          t
-        }
-        ts.min
+    val json100 = if (!scales.contains(100)) "" else {
+      val t10 = rows.map { case (n, _, b) => n -> b }.toMap
+      val rows100 = decadeConfig(spark) {
+        DecadeQueries.flatMap(n => reps(n, 100, 2).toOption.map(ts => (n, ts.min)))
       }
-      System.err.println(s"[scale-probe] $n @100x ...")
-      val c = run(G100xDir)
-      val b = t10.getOrElse(n, Double.NaN)
-      System.err.println(f"[scale-probe] $n: $b%.2f s → $c%.2f s")
-      (n, b, c, c / b)
+      rows100.map { case (n, c) =>
+        val b = t10.getOrElse(n, Double.NaN)
+        System.err.println(f"[scale-probe] $n: $b%.2f s → $c%.2f s")
+        f""""$n":{"t10x":$b%.2f,"t100x":$c%.2f,"ratio":${c / b}%.2f}"""
+      }.mkString(""","queries100x":{""", ",", "}")
     }
-    spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", prevMaxPart)
-    spark.conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
-    spark.conf.unset("spark.graft.stageLevel")
-    val qjson100 = rows100.map { case (n, b, c, r) =>
-      f""""$n":{"t10x":$b%.2f,"t100x":$c%.2f,"ratio":$r%.2f}"""
-    }.mkString(",")
     println(s"""{"metric":"scale_probe","cpus":$cpus,""" +
-      s""""docs":[$d1,$d10,$d100],""" +
-      s""""embeddings":[$e1,$e10,$e100],"lineitem":[$l1,$l10,$l100],""" +
-      s""""queries":{$qjson},"queries100x":{$qjson100}}""")
+      s""""docs":${cards(0)},"embeddings":${cards(1)},""" +
+      s""""lineitem":${cards(2)},"queries":{$qjson}$json100}""")
     spark.stop()
   }
 }

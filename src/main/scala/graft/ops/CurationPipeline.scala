@@ -78,7 +78,7 @@ object CurationPipeline {
         maxHamming = 3)
       .select(col("doc_a"), col("doc_b"))
     val canon = DedupOps.connectedComponents(pairs,
-      exactDeduped.select(col("doc_id")), uncheckedRounds = 2)
+      exactDeduped.select(col("doc_id")))
     val nearDeduped = exactDeduped
       .join(canon, "doc_id")
       .filter(col("doc_id") === col("canon_id"))

@@ -113,7 +113,7 @@ object DedupIndex {
       DedupOps.simhashBands(sk, col("simhash")), MaxHamming), p.edges)
     write(DedupOps.connectedComponents(
       edges.select(col("doc_a"), col("doc_b")),
-      ds.select(col("doc_id")), uncheckedRounds = 2), p.canonical)
+      ds.select(col("doc_id"))), p.canonical)
     val classes = write(sk.groupBy(col("simhash"))
       .agg(min(col("doc_id")).as("doc_id")), p.classes)
     val classEdges = write(DedupOps.simhashPairs(
@@ -121,7 +121,7 @@ object DedupIndex {
       p.classEdges)
     write(DedupOps.starComponents(
       classEdges.select(col("doc_a"), col("doc_b")),
-      classes.select(col("doc_id")), uncheckedRounds = 2), p.classCanon)
+      classes.select(col("doc_id"))), p.classCanon)
     val sig = write(DedupOps.minhashSignatureNarrow(
       DedupOps.shingleArrays(ds), NumHashes), p.minhash)
     write(DedupOps.candidatePairs(

@@ -352,16 +352,9 @@ object DedupOps {
     * rounds (the production-scale pattern; large-star/small-star halves the
     * round count if diameters grow). Deterministic: min is order-free.
     *
-    * `pairs` needs (doc_a, doc_b); `docs` needs doc_id.
-    *
-    * `uncheckedRounds`: run that many initial rounds WITHOUT the fixpoint
-    * count — each skipped count is one driver round-trip (a full job over
-    * the labels join). With pointer doubling, near-dup graphs (dense small
-    * cliques) converge in ≤2 rounds, so `uncheckedRounds = 2` halves the
-    * driver actions on the common path while changing nothing about the
-    * result: convergence is still verified by the first counted round. */
+    * `pairs` needs (doc_a, doc_b); `docs` needs doc_id. */
   def connectedComponents(pairs: DataFrame, docs: DataFrame,
-      maxIters: Int = 20, uncheckedRounds: Int = 0): DataFrame = {
+      maxIters: Int = 20): DataFrame = {
     // Materialize the edge list ONCE: every propagation round (and its
     // fixpoint count) references it, and `pairs` is typically an expensive
     // candidate-generation pipeline (band joins, sketches) that must not be
@@ -396,9 +389,7 @@ object DedupOps {
     // convergence never rests on the id-domain bound. One sum() per
     // round + one equality join at the true fixpoint replaces the
     // earlier checkpoint-then-changed-count pair of driver actions per
-    // checked round. `uncheckedRounds` is retained for API
-    // compatibility but superseded: the gate is free on every round.
-    val _ = uncheckedRounds
+    // checked round.
     // No initial sum needed: a NONEMPTY edge set always decreases the
     // sum in round 1 (its (a < b) edge drops b's label), so round 1 can
     // never be the fixpoint of the initial labels; the sentinel keeps
@@ -492,10 +483,9 @@ object DedupOps {
     * orientation — both sides are already-distinct, already-shrunk
     * frames, so any null side is a difference). At the fixpoint the edge
     * set IS the star forest (child → component-min), so the readout is
-    * one left join. `uncheckedRounds` is retained for API compatibility
-    * but superseded by the count gate (see the loop comment). */
+    * one left join. */
   def starComponents(pairs: DataFrame, docs: DataFrame,
-      maxIters: Int = 30, uncheckedRounds: Int = 0): DataFrame = {
+      maxIters: Int = 30): DataFrame = {
     // canonical (small, large) orientation, self-loops dropped. Each
     // round costs exactly ONE driver action: the round's edge set is
     // LAZILY localCheckpointed (plan truncation — see the loop comment)
@@ -518,13 +508,6 @@ object DedupOps {
     var nPrev = e.count()
     var converged = nPrev == 0L
     var i = 0
-    // uncheckedRounds is retained for API compatibility but SUPERSEDED
-    // by the count gate: its purpose was to skip known-futile equality
-    // joins on early rounds, and the count comparison now does that for
-    // free on every round (a non-fixpoint round almost always changes
-    // |e|), while still detecting an early fixpoint the fixed unchecked
-    // prefix would have run extra full rounds past.
-    val _ = uncheckedRounds
     while (!converged && i < maxIters) {
       // large-star over the symmetrized adjacency: per center c,
       // m = min(neighbors ∪ c); larger neighbors re-link to m. The
@@ -619,8 +602,7 @@ object DedupOps {
     * Returns one (τ, labels) pair per requested τ; labels has the
     * [[starComponents]] contract (doc_id, canon_id) over `docs`. */
   def sweepComponents(edges: DataFrame, docs: DataFrame, weight: Column,
-      taus: Seq[Int], uncheckedRounds: Int = 0,
-      edgesWithinDocs: Boolean = false): Seq[(Int, DataFrame)] = {
+      taus: Seq[Int], edgesWithinDocs: Boolean = false): Seq[(Int, DataFrame)] = {
     require(taus.nonEmpty && taus == taus.sorted,
       s"taus must be ascending, got $taus")
     // Edge endpoints outside `docs` still carry CONNECTIVITY in a
@@ -653,8 +635,7 @@ object DedupOps {
       val step = edges.filter(weight > lit(prev) && weight <= lit(tau.toLong))
         .select(col("doc_a"), col("doc_b"))
       labels = (if (labels == null) {
-        starComponents(step, nodes,
-          uncheckedRounds = uncheckedRounds)
+        starComponents(step, nodes)
       } else {
         // contract: map both endpoints of the newly activated edges to
         // their τ₋ canonical ids, run star-CC over the supernode graph
@@ -666,8 +647,7 @@ object DedupOps {
             .join(labels.select(col("doc_id").as("doc_b"),
               col("canon_id").as("cb")), "doc_b")
             .select(col("ca").as("doc_a"), col("cb").as("doc_b")),
-          labels.select(col("canon_id").as("doc_id")).distinct(),
-          uncheckedRounds = uncheckedRounds)
+          labels.select(col("canon_id").as("doc_id")).distinct())
         labels.join(contracted.select(col("doc_id").as("canon_id"),
             col("canon_id").as("nc")), "canon_id")
           .select(col("doc_id"), col("nc").as("canon_id"))
@@ -686,10 +666,8 @@ object DedupOps {
     * Cost over [[connectedComponents]]: one degree aggregation + one
     * |components|-row argmax — both map-side-combined; the component loop
     * dominates unchanged. Returns (doc_id, degree, keeper). */
-  def centralCanonical(pairs: DataFrame, docs: DataFrame,
-      uncheckedRounds: Int = 0): DataFrame = {
-    val labels = connectedComponents(pairs, docs,
-      uncheckedRounds = uncheckedRounds)
+  def centralCanonical(pairs: DataFrame, docs: DataFrame): DataFrame = {
+    val labels = connectedComponents(pairs, docs)
     val deg = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("degree"))

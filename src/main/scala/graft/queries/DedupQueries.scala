@@ -372,7 +372,7 @@ object DedupQueries {
         .distinct()
       val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
       val nEdges = edges.agg(count(lit(1)).as("n_edges"))
-      val comp = connectedComponents(edges, nodes, uncheckedRounds = 2)
+      val comp = connectedComponents(edges, nodes)
       val kPer = comp.groupBy(col("canon_id")).agg(count(lit(1)).as("k"))
       val ec = edges.join(comp.toDF("doc_a", "canon_id"), "doc_a")
       val mPer = ec.groupBy(col("canon_id")).agg(count(lit(1)).as("m"))
@@ -850,8 +850,7 @@ object DedupQueries {
     // degree signal. Bench-excluded like d6/d7 (same iterative loop).
     "d10_central_keeper" -> ((s, d) => {
       val pairs = servedEdges(s, d)
-      centralCanonical(pairs, docs(s, d).select(col("doc_id")),
-          uncheckedRounds = 2)
+      centralCanonical(pairs, docs(s, d).select(col("doc_id")))
         .orderBy(col("doc_id"))
     }),
 
@@ -864,11 +863,7 @@ object DedupQueries {
       val df = docs(s, d).withColumn("hs", tokenHashes(tokens(col("text"))))
       val pairs = simhashPairs(simhashBands(df, simhash32(col("hs"))), MaxHamming)
         .select(col("doc_a"), col("doc_b"))
-      // near-dup components are dense small cliques: 2 pointer-doubled
-      // rounds reach the fixpoint, so skip their fixpoint counts (driver
-      // round-trips); round 3's count verifies convergence
-      connectedComponents(pairs, docs(s, d).select(col("doc_id")),
-          uncheckedRounds = 2)
+      connectedComponents(pairs, docs(s, d).select(col("doc_id")))
         .orderBy(col("doc_id"))
     }),
 
@@ -898,8 +893,7 @@ object DedupQueries {
     // the class collapse removes before any graph loop runs.
     "d33r_star_residual" -> ((s, d) => {
       val (classes, edges) = residualClassGraph(s, d)
-      starComponents(edges, classes.select(col("doc_id")),
-          uncheckedRounds = 2)
+      starComponents(edges, classes.select(col("doc_id")))
         .orderBy(col("doc_id"))
     }),
 
@@ -924,13 +918,13 @@ object DedupQueries {
         concat(col("doc_a").cast("string"), lit("_"),
           col("doc_b").cast("string"))) % 5
       val base = starComponents(pairs.filter(splitH =!= 0),
-        docs(s, d).select(col("doc_id")), uncheckedRounds = 2)
+        docs(s, d).select(col("doc_id")))
       val starEdges = base.filter(col("canon_id") =!= col("doc_id"))
         .select(col("doc_id").as("doc_a"), col("canon_id").as("doc_b"))
       starComponents(
           starEdges.union(pairs.filter(splitH === 0)
             .select(col("doc_a"), col("doc_b"))),
-          docs(s, d).select(col("doc_id")), uncheckedRounds = 2)
+          docs(s, d).select(col("doc_id")))
         .orderBy(col("doc_id"))
     }),
 
@@ -956,12 +950,8 @@ object DedupQueries {
       val pairs = graft.ops.DedupIndex.classEdgesDf(s, ix)
       val nodes = graft.ops.DedupIndex.classesDf(s, ix)
         .select(col("doc_id")).transform(graft.Tables.stage)
-      // uncheckedRounds=1 (not the from-scratch loops' 2): every step
-      // after τ=0 runs on an already-contracted supernode graph whose
-      // star rounds converge in 1-2 iterations — forcing a third
-      // unchecked round costs more stages than the fixpoint check saves
       val byTau = sweepComponents(pairs, nodes, col("hamming"),
-        0 to MaxHamming, uncheckedRounds = 1,
+        0 to MaxHamming,
         // class-edge endpoints come from the same persisted class table
         // as `nodes` — subset by construction, so the sweep skips its
         // defensive extra-endpoint probe (2 driver actions)

@@ -28,26 +28,34 @@ object StatefulOps {
 
   val MinAssessments = 4
 
-  /** Fold risk events into per-customer state; emit a score only once the
-    * customer has ≥ minAssessments (README.md:96 behavior). Works on both
+  /** One key's step, shared by both operator forms: fold a batch's events
+    * into `prior` and emit a score once the customer has ≥ minAssessments
+    * (README.md:96 behavior). The fold runs in score order — event order
+    * within a batch is not guaranteed by the source. A nested object, so
+    * the operator closures reach it statically and do not capture the
+    * (non-serializable) enclosing object. */
+  private object RiskFold {
+    def apply(customer: String, prior: RiskState, batch: Iterator[RiskEvent],
+        minAssessments: Int): (RiskState, Iterator[RiskScore]) = {
+      val s = batch.map(e => Option(e.score).map(_.toDouble).getOrElse(0.0)).toSeq.sorted
+        .foldLeft(prior)((s, sc) => RiskState(s.nAssessments + 1, s.totalScore + sc))
+      (s, if (s.nAssessments >= minAssessments)
+        Iterator(RiskScore(customer, s.nAssessments, s.totalScore / s.nAssessments))
+      else Iterator.empty)
+    }
+  }
+
+  /** Fold risk events into per-customer state ([[RiskFold]]). Works on both
     * streaming and batch Datasets (batch: single invocation per key). */
   def runningRiskScore(spark: SparkSession, events: Dataset[RiskEvent],
       minAssessments: Int = MinAssessments): Dataset[RiskScore] = {
     import spark.implicits._
     def update(customer: String, batch: Iterator[RiskEvent],
         state: GroupState[RiskState]): Iterator[RiskScore] = {
-      var s = state.getOption.getOrElse(RiskState(0L, 0.0))
-      // deterministic fold: sort the micro-batch by (score) — event order
-      // within a batch is not guaranteed by the source
-      val evs = batch.toSeq.sortBy(e => Option(e.score).map(_.toDouble).getOrElse(0.0))
-      evs.foreach { e =>
-        val sc = Option(e.score).map(_.toDouble).getOrElse(0.0)
-        s = RiskState(s.nAssessments + 1, s.totalScore + sc)
-      }
+      val (s, out) = RiskFold(customer,
+        state.getOption.getOrElse(RiskState(0L, 0.0)), batch, minAssessments)
       state.update(s)
-      if (s.nAssessments >= minAssessments)
-        Iterator(RiskScore(customer, s.nAssessments, s.totalScore / s.nAssessments))
-      else Iterator.empty
+      out
     }
     events.groupByKey(_.customer)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -72,17 +80,10 @@ object StatefulOps {
 
     override def handleInputRows(customer: String, rows: Iterator[RiskEvent],
         timerValues: TimerValues): Iterator[RiskScore] = {
-      var s = if (state.exists()) state.get() else RiskState(0L, 0.0)
-      // same deterministic intra-batch fold as the GroupState form
-      rows.toSeq.sortBy(e => Option(e.score).map(_.toDouble).getOrElse(0.0))
-        .foreach { e =>
-          val sc = Option(e.score).map(_.toDouble).getOrElse(0.0)
-          s = RiskState(s.nAssessments + 1, s.totalScore + sc)
-        }
+      val (s, out) = RiskFold(customer,
+        if (state.exists()) state.get() else RiskState(0L, 0.0), rows, minAssessments)
       state.update(s)
-      if (s.nAssessments >= minAssessments)
-        Iterator(RiskScore(customer, s.nAssessments, s.totalScore / s.nAssessments))
-      else Iterator.empty
+      out
     }
   }
 

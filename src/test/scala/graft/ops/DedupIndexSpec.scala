@@ -44,7 +44,7 @@ class DedupIndexSpec extends SparkSpecBase {
   test("served canonical ≡ from-scratch connected components (d7's chain)") {
     val scratch = connectedComponents(
       DedupIndex.edgesDf(spark, ix).select(col("doc_a"), col("doc_b")),
-      docs.select(col("doc_id")), uncheckedRounds = 2)
+      docs.select(col("doc_id")))
     assert(sorted(DedupIndex.canonicalDf(spark, ix)) == sorted(scratch))
   }
 
@@ -58,7 +58,7 @@ class DedupIndexSpec extends SparkSpecBase {
       simhashBands(classes, col("simhash")), DedupIndex.MaxHamming)
     assert(sorted(DedupIndex.classEdgesDf(spark, ix)) == sorted(ce))
     val cc = starComponents(ce.select(col("doc_a"), col("doc_b")),
-      classes.select(col("doc_id")), uncheckedRounds = 2)
+      classes.select(col("doc_id")))
     assert(sorted(DedupIndex.classCanonDf(spark, ix)) == sorted(cc))
   }
 

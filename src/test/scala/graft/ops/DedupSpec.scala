@@ -179,8 +179,7 @@ class DedupSpec extends SparkSpecBase {
       // filter accumulates the full (prev, tau] weight window, so gaps
       // must not drop edges)
       val taus = if (trial == 3) Seq(1, 3) else (0 to 3).toSeq
-      sweepComponents(edges, nodes, col("hamming"), taus,
-          uncheckedRounds = 1).foreach { case (tau, labels) =>
+      sweepComponents(edges, nodes, col("hamming"), taus).foreach { case (tau, labels) =>
         val direct = starComponents(
           edges.filter(col("hamming") <= tau)
             .select(col("doc_a"), col("doc_b")), nodes)
